@@ -47,7 +47,9 @@ object RelationalQueries4 {
       val schema = StructType(Seq(StructField("k", IntegerType)))
       // sort first, parse after (the q61 move): the ORDER BY's range
       // sampler executes its child twice, so parsing below the sort
-      // paid the JSON parse 2x
+      // paid the JSON parse 2x. It extracts a single field, so, unlike
+      // q61 and q62, it needs no Generate barrier: there is no second
+      // field for projection collapsing to re-inline the parse into
       Tables.events(s, d)
         .orderBy("event_id")
         .select(col("event_id"),
