@@ -29,15 +29,16 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (k, q) => k -> q.fn }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  lazy val oracleSql: Map[String, String] =
     all.collect { case (k, Q(_, Some(sql))) => k -> sql }
 
-  private def all: Map[String, Q] =
+  /** Built once: each family's `defs` allocates its whole map per call. */
+  private lazy val all: Map[String, Q] =
     graft.queries.EventLogQueries.defs ++
     graft.queries.EventLogQueries2.defs ++
     graft.queries.EventLogQueries3.defs ++

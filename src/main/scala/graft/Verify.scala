@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // Optional 3rd arg (dev only): comma-separated query names — dump and
-    // oracle just that subset, for fast iteration with tools/check.py.
+    // Optional 3rd arg: comma-separated query names — dump and oracle
+    // just that subset, for fast iteration with tools/check.py.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     // a typo'd name must not yield a 0-query run that reads as a pass
@@ -16,14 +15,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown queries requested: ${unknown.toSeq.sorted.mkString(", ")}")
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

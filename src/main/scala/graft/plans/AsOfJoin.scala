@@ -96,8 +96,7 @@ object AsOfJoinStrategy extends SparkStrategy {
     case _ => Nil
   }
 
-  /** Idempotent runtime injection (the `ApproxDistinctRewrite.install`
-    * dual); `GraftExtensions` is the build-time path. */
+  /** Idempotent runtime injection of the strategy into a live session. */
   def install(s: SparkSession): Unit = synchronized {
     if (!s.experimental.extraStrategies.contains(this))
       s.experimental.extraStrategies = s.experimental.extraStrategies :+ this

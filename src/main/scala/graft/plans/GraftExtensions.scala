@@ -9,15 +9,15 @@ import graft.functions.{FloatDot, IntervalPairStats, WindowMin}
   * pieces — the build-time injection path (the runtime path is the
   * `register` method on each function object, for an existing session):
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions()) ...
+  *   graft.Session.local(4, "spark.sql.extensions" -> classOf[GraftExtensions].getName)
   *   // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * Both codegen expressions are injected: `graft_dot` (float-array dot
-  * product) and `graft_window_min` (sliding-window minima, the
-  * winnowing kernel). Per SURVEY.md §4.2, every operator the reference
-  * implies is expressible with built-in Catalyst plans, so no custom
-  * Rule[LogicalPlan]/SparkStrategy is justified — the decision is
-  * recorded there and this class is the place one would plug in.
+  * The codegen expressions are injected: `graft_dot` (float-array dot
+  * product), `graft_window_min` (sliding-window minima, the winnowing
+  * kernel) and `graft_interval_pairs`. Per SURVEY.md §4.2, every operator
+  * the reference implies is expressible with built-in Catalyst plans, so
+  * no custom Rule[LogicalPlan] is injected — this class is the place one
+  * would plug in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -36,10 +36,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[IntervalPairStats].getName, "graft_interval_pairs"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         IntervalPairStats.build(children)))
-    // Opt-in approx-distinct mode (conf-gated, off by default): the one
-    // Rule[LogicalPlan] shipped, and it is a PERFORMANCE rewrite, not a
-    // semantic necessity — §4.2's no-custom-Rule-required decision
-    // stands (see ApproxDistinctRewrite's scaladoc).
-    e.injectOptimizerRule(_ => ApproxDistinctRewrite)
   }
 }

@@ -70,9 +70,9 @@ object RelationalQueries11 {
     * count / sums / min-max are all mergeable by re-aggregation, which
     * is the entire trick — a refresh aggregates ONLY the delta and
     * merges. (COUNT DISTINCT is deliberately absent: it is not
-    * algebraic; its mergeable form is the HLL sketch, cf.
-    * plans/ApproxDistinctRewrite.) Dates travel as ISO strings so
-    * min/max merge lexicographically ≡ chronologically in both engines. */
+    * algebraic; its mergeable form is the HLL sketch.) Dates travel as
+    * ISO strings so min/max merge lexicographically ≡ chronologically in
+    * both engines. */
   private def revPartial(df: DataFrame): DataFrame =
     df.groupBy("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n_rows"),

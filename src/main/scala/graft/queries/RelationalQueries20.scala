@@ -101,8 +101,9 @@ object RelationalQueries20 {
     // repartition on the group keys makes the child's partitioning
     // satisfy the aggregate's required distribution, so Spark plans ONE
     // complete-mode aggregate after the exchange: same rows on the
-    // wire, no useless map-side hash. Measured (tools/Q95Ab, parity-
-    // checked): sf10 8.0 → 5.4 s, sf100 76.9 → 37.2 s. The rewrite is
+    // wire, no useless map-side hash. Measured (parity-checked; SCALING.md
+    // "q95's partial-aggregate degradation"): sf10 8.0 → 5.4 s, sf100
+    // 76.9 → 37.2 s. The rewrite is
     // the right call exactly because lines-per-group (~107) is scale-
     // invariant while the domain is not — a corpus where the group
     // domain were BOUNDED would want the partial aggregate back.

@@ -46,10 +46,11 @@ object SemiStructuredQueries {
       // whole suite for a redundant parse. xpath_* stays covered:
       // XmlPathSpec pins xpath_string ≡ from_xml's _status on real
       // corpus rows plus quoting/empty edges.
-      // SORT FIRST, PARSE AFTER (tools/ParseAb): a global ORDER BY is a
-      // range exchange whose boundary-sampling pass EXECUTES THE CHILD
-      // A SECOND TIME — with the parse below the sort the suite paid
-      // the DOM parse twice (35.6 s vs 11.3 s parse-only at sf10).
+      // SORT FIRST, PARSE AFTER (OPTIMIZATION_r10.md §A): a global
+      // ORDER BY is a range exchange whose boundary-sampling pass
+      // EXECUTES THE CHILD A SECOND TIME — with the parse below the
+      // sort the suite paid the DOM parse twice (35.6 s vs 11.3 s
+      // parse-only at sf10).
       // Sorting the narrow scan first makes the sampling pass a column
       // read, and the parse runs once, above the sort, inside a
       // Generate barrier (explode of a 1-element array) so projection

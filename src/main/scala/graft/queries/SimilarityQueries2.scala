@@ -358,10 +358,10 @@ object SimilarityQueries2 {
     // SCALE GATE (round 10, closing the round-9 weak item): exact
     // max-cosine against all smaller-id cellmates is quadratic per cell,
     // and the fixture quantizer's cell COUNT is fixed (NSEEDS=8) while
-    // the corpus grows — the round-9 SweepProbe measured 2.5e9 pair
-    // evaluations / 272 s at sf10 in this query's write path (bench's
-    // count() action hid it via outer-join elimination; see SCALING.md
-    // round 9). Same q72 playbook as the sibling sweep below: the
+    // the corpus grows — 2.5e9 pair evaluations / 272 s at sf10 in this
+    // query's write path (bench's count() action hid it via outer-join
+    // elimination; SCALING.md "The third decade catches a round-9
+    // query"). Same q72 playbook as the sibling sweep below: the
     // declared form is input-gated to vec_id < 20000 — a no-op at every
     // SF ≤ 1 (oracle hash unchanged), a constant pair-budget ceiling
     // above. The ungated corpus-scale forms are dd_embedding_neardup's
@@ -414,8 +414,8 @@ object SimilarityQueries2 {
     // max-cosine against all smaller-id cellmates is QUADRATIC PER CELL
     // by semantics, and the fixture quantizer's cell COUNT is fixed
     // (NSEEDS=8) while the corpus grows — at sf10's 200k vectors that
-    // is 2.5e9 dot evaluations (~272 s measured; the probe run is
-    // tools/SweepProbe). The sibling ss_semdedup had the SAME true
+    // is 2.5e9 dot evaluations (~272 s measured; SCALING.md "The third
+    // decade catches a round-9 query"). The sibling ss_semdedup had the SAME true
     // cost — its fast bench number was a count()-action artifact:
     // Catalyst ELIMINATES the left-outer join against the distinct
     // drops side when only row counts are observed, so bench never ran
@@ -766,43 +766,4 @@ object SimilarityQueries2 {
         .orderBy("qid")
     }
   )
-}
-
-/** Probe hooks for tools/SweepProbe — expose the sweep's sub-plans so the
-  * stage profile is measured on the EXACT frames the declared query uses. */
-object SimilarityQueries2Probe {
-  import SimilarityQueries2._
-  import graft.functions.Vectors._
-
-  def members(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.FloatDot.register(s)
-    val e = Tables.embeddings(s, d).withColumn("nrm", nativeNorm(col("embedding")))
-    refined(e, d).filter(col("rn") === 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("ccluster").as("cluster"))
-  }
-
-  private def pairs(s: org.apache.spark.sql.SparkSession, d: String) = {
-    val m = members(s, d)
-    val a = m.select(col("cluster").as("ca"), col("vec_id").as("va"),
-                     col("embedding").as("ea"), col("nrm").as("na"))
-    val b = m.select(col("cluster").as("cb"), col("vec_id").as("vb"),
-                     col("embedding").as("eb"), col("nrm").as("nb"))
-    a.join(b, col("ca") === col("cb") && col("va") < col("vb"))
-  }
-
-  def pairCount(s: org.apache.spark.sql.SparkSession, d: String): Long =
-    pairs(s, d).count()
-
-  def survivorCount(s: org.apache.spark.sql.SparkSession, d: String, t: Double): Long =
-    pairs(s, d)
-      .filter(nativeDot(col("ea"), col("eb")) / (col("na") * col("nb")) >= t)
-      .count()
-
-  def mxCount(s: org.apache.spark.sql.SparkSession, d: String, t: Double): Long =
-    pairs(s, d)
-      .select(col("vb").as("mvec"),
-              (nativeDot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
-      .filter(col("cos") >= t)
-      .groupBy("mvec").agg(max("cos").as("mcos"))
-      .count()
 }

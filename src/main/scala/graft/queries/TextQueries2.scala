@@ -49,10 +49,12 @@ object TextQueries2 {
       // exchange AND a per-doc rollup; the whole profile is a 64-counter
       // in-row fold (same tie-break: max count, then lowest bucket).
       // Sort first, fold after (the q61 move). Parity vs the exploded
-      // form pinned in TokenKernelsSpec.
+      // form pinned in TokenKernelsSpec. A NULL-text doc has no tokens:
+      // the oracle (and the exploded form) emit no row for it.
       graft.functions.Shingles.register(s)
       Tables.documents(s, d)
-        .select(col("doc_id"), col("text")).orderBy("doc_id")
+        .select(col("doc_id"), col("text")).filter(col("text").isNotNull)
+        .orderBy("doc_id")
         .select(col("doc_id"), expr("graft_feature_hash(text)").as("st"))
         .select(col("doc_id"), col("st.nnz").cast("int").as("nnz"),
                 col("st.l2sq").as("l2sq"),

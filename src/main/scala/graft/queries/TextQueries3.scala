@@ -269,10 +269,10 @@ object TextQueries3 {
          |ORDER BY norm_weight DESC, doc_id LIMIT 20""".stripMargin) { (s, d) =>
       // FLAT bigram stream: explode POSITIONS, then hash in a plain
       // codegen'd projection. Three shapes were measured before this
-      // one (Micro's dsir anatomy, sf1, local[4]): building the bucket
-      // array with a transform LAMBDA and exploding it costs ~10 s per
-      // pass regardless of what follows — each exploded row re-enters
-      // the interpreted lambda context — vs 1.0 s for this flat
+      // one (SCALING.md "Round 4 close", sf1, local[4]): building the
+      // bucket array with a transform LAMBDA and exploding it costs
+      // ~10 s per pass regardless of what follows — each exploded row
+      // re-enters the interpreted lambda context — vs 1.0 s for this flat
       // position-explode (and element_at×2 inside the lambda doubles
       // the damage vs slice+concat_ws, the BASELINE shingle note).
       // Single-token docs: the two-arg sequence(1, 0) DESCENDS in

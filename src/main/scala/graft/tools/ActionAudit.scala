@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Audit of Bench's timing action (round 10): for every declared query,
   * compare the OPTIMIZED plan under a count() action against the plan
   * the write path executes, and flag queries whose expensive operators
@@ -29,12 +27,8 @@ object ActionAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.cpus(32),
+      "spark.sql.shuffle.partitions" -> "32")
     spark.sparkContext.setLogLevel("ERROR")
     graft.queries.Warm.all(spark, sfDir)
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{Tables}
+import graft.Tables
 import graft.sources.FileFormats
 import graft.streaming.EventStream
 
@@ -10,13 +9,8 @@ import graft.streaming.EventStream
 object FormatsDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions())
-      .getOrCreate()
+    val spark = graft.Session.local(4,
+      "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName)
     spark.sparkContext.setLogLevel("ERROR")
     // extensions-injected custom expression, resolved from SQL
     println("GRAFT_DOT via SQL: " + spark.sql(

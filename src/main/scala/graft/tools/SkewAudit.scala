@@ -2,10 +2,11 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-9 audit (round-8 verdict item 2): apply the SkewAb finding to
+/** Round-9 audit (round-8 verdict item 2): apply the AQE-vs-salting
+  * finding (SCALING.md "Round 8: closing the round-7 verdict items") to
   * the SUITE'S OWN declared queries — the ones with corpus-scale
   * shuffles on keys a production log CAN skew (a bot user, a dominant
   * supplier, a whale customer) — under synthesized hot-key fixtures at
@@ -30,7 +31,7 @@ import org.apache.spark.sql.functions._
   * Every other table is symlinked from the base dir, so the declared
   * queries run UNCHANGED against each fixture. Timings print per arm;
   * for the join-shaped queries the hot arm also reports whether stock
-  * AQE actually split (SkewAb's isSkewJoin probe) and re-times with
+  * AQE actually split (`skewSplit`'s isSkewJoin probe) and re-times with
   * skewJoin disabled, so the table shows which regime of the round-8
   * advisory each query lands in. Findings land in SCALING.md round 9.
   */
@@ -64,10 +65,7 @@ object SkewAudit {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/tmp/sf10"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = "/tmp/skewaudit"

@@ -52,13 +52,9 @@ object Synth {
     val only: Set[String] =
       if (args.length > 3) args(3).split(',').toSet
       else graft.Tables.names.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus(32),
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: => DataFrame, t: String): Unit =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid: time declared queries end-to-end, warm JVM, without paying
   * for the whole Bench sweep. The action matches Bench's noop-sink
   * write (full plan, every column materialized — count() lets Catalyst
@@ -13,15 +11,12 @@ object TimeQuery {
     val names = args(0).split(',').toSeq
     val d     = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder().master("local[32]")
-      // 32 fits sf ≤ 10; the sf100 audit sets SPARK_GRAFT_SHUFFLE=128 so
-      // a 600M-row shuffle partition stays spill-free (same rule the
-      // 100 TB sizing note in Portable.scala states: partitions scale
-      // with the data, the code doesn't change)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 32 fits sf ≤ 10; the sf100 audit sets SPARK_GRAFT_SHUFFLE=128 so
+    // a 600M-row shuffle partition stays spill-free (same rule the
+    // 100 TB sizing note in Portable.scala states: partitions scale
+    // with the data, the code doesn't change)
+    val spark = graft.Session.local(32,
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val action = if (args.length > 3) args(3) else "noop"
     for (name <- names; i <- 1 to reps) {

@@ -78,65 +78,6 @@ class SkewSpec extends SparkSpec {
       s"salting did not spread the hot reducer: naive=$naiveMax salted=$saltedMax")
   }
 
-  test("q52's threshold flips the join strategy: salted on skew, plain on uniform") {
-    val d   = fixtureDir
-    val ev  = Tables.events(spark, d).select("event_id", "user_id", "props")
-    val dim = spark.read.parquet(s"$d/dim.parquet")
-    // salting exists for the dim-NOT-broadcastable regime (a broadcast
-    // join has no shuffle to skew); pin the shuffle join like the AQE
-    // test so the test-scale dim doesn't hide the exchange under test
-    val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
-
-    // the skewed fixture (one user = 50% of rows) crosses the advisory
-    // threshold → the planner salts
-    val (strat, salted) = graft.plans.SkewPlanner
-      .skewAwareJoin(ev, dim, "user_id", col("event_id"))
-    assert(strat === "salted", "profile above threshold must choose the salted join")
-
-    // result equality with the plain join, column for column
-    val cols  = Seq("user_id", "event_id", "props", "tag").map(col)
-    val plain = ev.join(dim, "user_id").select(cols: _*)
-    val got   = salted.select(cols: _*)
-    assert(got.count() === 60000)
-    assert(got.exceptAll(plain).isEmpty && plain.exceptAll(got).isEmpty,
-      "salted join changed the result")
-
-    // plan-visible difference: the salted join's exchange carries the
-    // salt next to the key — the strategy actually changed the plan
-    val p = got.queryExecution.executedPlan.toString
-    assert(p.contains("__salt"), "salted join plan does not carry the salt:\n" + p)
-    assert("hashpartitioning\\(user_id#\\d+L?, __salt#".r.findFirstIn(p).isDefined,
-      "join exchange does not partition on (key, salt):\n" + p)
-
-    // measured difference: the hot key occupies ONE reduce partition
-    // under the plain key, several under (key, salt), and the max
-    // per-reducer row load drops by more than half
-    val P    = 32
-    val salt = pmod(col("event_id"), lit(8)).cast("int")
-    val naiveMax = ev.groupBy(pmod(hash(col("user_id")), lit(P)).as("p"))
-      .count().agg(max("count")).head().getLong(0)
-    val saltedMax = ev.groupBy(pmod(hash(col("user_id"), salt), lit(P)).as("p"))
-      .count().agg(max("count")).head().getLong(0)
-    assert(saltedMax * 2 < naiveMax,
-      s"salted routing did not spread the hot reducer: naive=$naiveMax salted=$saltedMax")
-
-    // the SAME planner on a uniform key profile stays plain — the
-    // threshold flips the strategy, not the fixture
-    val uniform = ev.withColumn("user_id", pmod(col("event_id"), lit(150)))
-    val (strat2, _) = graft.plans.SkewPlanner
-      .skewAwareJoin(uniform, dim, "user_id", col("event_id"))
-    assert(strat2 === "plain", "uniform profile must keep the plain join")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE skew-join splits the hot partition on the join path") {
     val d = fixtureDir
     val keys = Seq(
