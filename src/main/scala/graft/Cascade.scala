@@ -210,24 +210,16 @@ final class Cascade(spark: SparkSession, root: String) {
     * group to the topic's current maintenance epoch, keeping the
     * committed ordinals, and return how many of the group's positions
     * now sit below the earliest retained offset of their sequence — the
-    * positions [[poll]]'s earliest-survivor resume will move. One
-    * min-stats aggregate on the log; control-plane cost. */
+    * positions [[poll]]'s earliest-survivor resume will move. The
+    * earliest offsets come from [[Topic.offsetBounds]]'s footer stats. */
   def acceptMaintenance(group: String, topic: String): Long = {
     requireTopic(topic)
     val committed = committedOffsets(group, topic)
     val moved =
       if (committed.isEmpty) 0L
       else {
-        val log = spark.read.parquet(dir(topic))
-        val earliest: Map[Int, Long] =
-          if (log.columns.contains("shard"))
-            log.groupBy("shard").agg(min(col("offset")).as("lo"))
-              .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          else {
-            val h = log.agg(min(col("offset"))).head()
-            if (h.isNullAt(0)) Map.empty else Map(-1 -> h.getLong(0))
-          }
-        committed.count { case (sh, next) => earliest.get(sh).exists(_ > next) }.toLong
+        val earliest = Topic.offsetBounds(spark, dir(topic))
+        committed.count { case (sh, next) => earliest.get(sh).exists(_._1 > next) }.toLong
       }
     pinGroupEpoch(group, topic)
     moved
@@ -242,8 +234,9 @@ final class Cascade(spark: SparkSession, root: String) {
                    shard: Option[Int] = None): Unit = {
     requireTopic(topic)
     requireGroupEpoch(group, topic)
-    require(nextOffset >= 0 && nextOffset <= highWaterMark(topic) + 1,
-      s"commit $nextOffset out of range for $topic (hwm=${highWaterMark(topic)})")
+    val hwm = highWaterMark(topic)
+    require(nextOffset >= 0 && nextOffset <= hwm + 1,
+      s"commit $nextOffset out of range for $topic (hwm=$hwm)")
     writeOffsets(group, topic,
       committedOffsets(group, topic).updated(shard.getOrElse(-1), nextOffset))
   }
@@ -269,9 +262,9 @@ final class Cascade(spark: SparkSession, root: String) {
     * the committed position points below the log's earliest retained
     * offset — `Topic.retain` expired it while the group was away — the
     * poll resumes from the earliest survivor instead of returning an
-    * empty frame forever. The earliest-offset probe is one min-stats
-    * scan on the (shard-pruned) log, control-plane cost like the
-    * commit itself.
+    * empty frame forever. The earliest offset comes from
+    * [[Topic.offsetBounds]]'s footer stats: no Spark job before the
+    * consume itself.
     *
     * `onMaintenance` is the group's declared recovery policy when the
     * topic's maintenance epoch moved past its pin (see
@@ -297,12 +290,11 @@ final class Cascade(spark: SparkSession, root: String) {
         } else requireGroupEpoch(group, topic) // first contact: pin as usual
     }
     val committed = committedOffsets(group, topic).getOrElse(shard.getOrElse(-1), 0L)
-    val base = shard match {
-      case Some(sh) => spark.read.parquet(dir(topic)).filter(col("shard") === sh)
-      case None     => spark.read.parquet(dir(topic))
-    }
-    val head = base.agg(min(col("offset"))).head()
-    val earliest = if (head.isNullAt(0)) 0L else head.getLong(0)
+    val bounds = Topic.offsetBounds(spark, dir(topic))
+    val earliest = (shard match {
+      case Some(sh) => bounds.get(sh).map(_._1)
+      case None     => bounds.valuesIterator.map(_._1).minOption
+    }).getOrElse(0L)
     val from = math.max(committed, earliest)
     if (from > committed) System.err.println(
       s"[graft] group $group on $topic${shard.fold("")(s => s" shard $s")}: " +
@@ -381,17 +373,14 @@ final class Cascade(spark: SparkSession, root: String) {
 
   /** Per-shard consumer lag: committed position vs the log head —
     * (shard, committed_next, high_water_mark, lag). Uncommitted
-    * sequences report position 0 (lag = entire log). One footer-pruned
-    * stats aggregate; rows bounded by shard count. */
+    * sequences report position 0 (lag = entire log). The heads come
+    * from [[Topic.offsetBounds]]'s footer stats; a zero-row topic
+    * reports high_water_mark -1. */
   def lag(group: String, topic: String): DataFrame = {
     requireTopic(topic)
     import spark.implicits._
-    val log = spark.read.parquet(dir(topic))
-    val hwms: Map[Int, Long] =
-      if (log.columns.contains("shard"))
-        log.groupBy("shard").agg(max(col("offset")).as("hwm"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else Map(-1 -> log.agg(max(col("offset"))).head().getLong(0))
+    val heads = Topic.shardHighWaterMarks(spark, dir(topic))
+    val hwms = if (heads.isEmpty) Map(-1 -> -1L) else heads
     val committed = committedOffsets(group, topic)
     hwms.toSeq.sortBy(_._1).map { case (sh, hwm) =>
       val next = committed.getOrElse(sh, 0L)

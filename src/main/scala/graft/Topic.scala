@@ -29,8 +29,10 @@ import org.apache.spark.sql.functions._
   *     semantics.
   *
   * At 100 TB: a topic is many parquet files; publish appends new files only
-  * (no rewrite), the high-water mark is a cheap max over footer stats of the
-  * newest files, and consume(n) is a metadata-pruned scan. Ordinal
+  * (no rewrite), the offset bounds and high-water mark are a driver-side
+  * fold over parquet footer statistics (`offsetBounds`: each footer read
+  * once and cached, so a call is one listing plus the new files' footers,
+  * and no Spark job), and consume(n) is a metadata-pruned scan. Ordinal
   * assignment within a batch is FULLY PARALLEL (range-partitioned sort +
   * zipWithIndex, see `assignOffsets` — no single-partition stage); what the
   * global ordinal does serialize is publish CALLS per topic (the hwm
@@ -90,21 +92,141 @@ object Topic {
     readEpochFile(hfs, epochPath(topicDir))
   }
 
-  /** Current high-water mark (last assigned offset); -1 for empty/new. */
-  def highWaterMark(spark: SparkSession, topicDir: String): Long = {
-    val (hfs, p) = fs(spark, topicDir)
-    if (!hfs.exists(p)) return -1L
-    // max over the offset column: column pruning makes this a
-    // single-column scan. It is NOT footer-metadata-only — Spark's
-    // default (v1) parquet reader doesn't push MAX into footer stats —
-    // so cost is O(log size); publish callers amortize it by passing
-    // knownHighWaterMark, and a real deployment would keep a hwm
-    // sidecar (or enable DSv2 parquet aggregate pushdown).
-    val row =
-      try spark.read.parquet(topicDir).agg(max(col("offset"))).head()
-      catch { case _: org.apache.spark.sql.AnalysisException => return -1L } // dir w/o data files
-    if (row.isNullAt(0)) -1L else row.getLong(0) // null max = zero-row topic
+  // ---- offset bounds from parquet footers ---------------------------------
+  // The log head without a Spark job: every data file's footer already
+  // holds the min/max of `offset` per row group, so the topic's bounds are
+  // a driver-side fold over footers. Footers are immutable (publish and
+  // maintenance only add or delete whole files), so each one is read once
+  // and cached per (path, length, mtime); a call costs one listing plus a
+  // footer read per file that is new since the last call.
+
+  /** One data file's offset range from its footer. `range` is None when
+    * the file holds no offset value (zero rows, or no `offset` column);
+    * `statsComplete` is false when a row group carries no statistics. */
+  private final case class FileOffsets(len: Long, mtime: Long, shard: Int,
+                                       range: Option[(Long, Long)], statsComplete: Boolean)
+
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, FileOffsets]]()
+
+  private val scanFallbackLogged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Spark's file-index filter for one path component
+    * (`HadoopFSUtils.shouldFilterOutPathName`, minus the `_metadata`
+    * summary files, which are never data): `_temporary/`,
+    * `_retain-tmp-*`, markers and `.crc` files are not read. */
+  private def hiddenName(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** The data files Spark's scan reads under a topic dir, each with its
+    * shard (-1 unsharded). Files under a `shard=` value that is not an
+    * int (a null shard) are left out: no ordinal sequence addresses them,
+    * as `Cascade.rebalance` ignores them too. A `listStatus` walk, not
+    * `listFiles`: on the local filesystem the latter forks a process per
+    * file to fill in permissions. */
+  private def dataFiles(hfs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
+      : Seq[(org.apache.hadoop.fs.FileStatus, Int)] = {
+    def walk(dir: org.apache.hadoop.fs.Path, shard: Int): Seq[(org.apache.hadoop.fs.FileStatus, Int)] =
+      hfs.listStatus(dir).toSeq.filterNot(st => hiddenName(st.getPath.getName)).flatMap { st =>
+        val name = st.getPath.getName
+        if (!st.isDirectory) { if (st.getLen > 0) Seq(st -> shard) else Nil }
+        else if (!name.startsWith("shard=")) walk(st.getPath, shard)
+        else name.stripPrefix("shard=").toIntOption.toSeq.flatMap(walk(st.getPath, _))
+      }
+    walk(root, -1)
   }
+
+  /** Read one footer's `offset` statistics; None when the file is corrupt
+    * and `spark.sql.files.ignoreCorruptFiles` is on (as the scan skips it). */
+  private def readFileOffsets(conf: org.apache.hadoop.conf.Configuration,
+                              st: org.apache.hadoop.fs.FileStatus, shard: Int,
+                              ignoreCorrupt: Boolean): Option[FileOffsets] = {
+    import scala.jdk.CollectionConverters._
+    val footer =
+      try {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getFooter finally r.close()
+      } catch {
+        case e @ (_: java.io.IOException | _: RuntimeException) =>
+          if (!ignoreCorrupt) throw new java.io.IOException(
+            s"corrupt parquet footer in ${st.getPath} (spark.sql.files.ignoreCorruptFiles " +
+              "skips it)", e)
+          System.err.println(s"[graft] skipping corrupt parquet file ${st.getPath}: $e")
+          return None
+      }
+    var lo = Long.MaxValue; var hi = Long.MinValue; var complete = true
+    for (block <- footer.getBlocks.asScala if block.getRowCount > 0;
+         chunk <- block.getColumns.asScala if chunk.getPath.toDotString == "offset") {
+      val stats = chunk.getStatistics
+      if (stats != null && stats.hasNonNullValue) {
+        (stats.genericGetMin, stats.genericGetMax) match {
+          case (mn: java.lang.Number, mx: java.lang.Number) =>
+            lo = math.min(lo, mn.longValue); hi = math.max(hi, mx.longValue)
+          case _ => complete = false
+        }
+      } else if (stats == null || !stats.isNumNullsSet || stats.getNumNulls != chunk.getValueCount)
+        complete = false // values present but no min/max recorded
+    }
+    Some(FileOffsets(st.getLen, st.getModificationTime, shard,
+                     if (lo <= hi) Some((lo, hi)) else None, complete))
+  }
+
+  /** The fallback for footers without `offset` statistics: the column
+    * scan, grouped like the footer path. */
+  private def scanOffsetBounds(spark: SparkSession, topicDir: String): Map[Int, (Long, Long)] = {
+    val log =
+      try spark.read.parquet(topicDir)
+      catch { case _: org.apache.spark.sql.AnalysisException => return Map.empty }
+    if (!log.columns.contains("offset")) return Map.empty
+    val key = if (log.columns.contains("shard")) col("shard") else lit(-1)
+    log.groupBy(key.as("k")).agg(min(col("offset")), max(col("offset"))).collect()
+      .collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
+        r.getInt(0) -> (r.getLong(1), r.getLong(2))
+      }.toMap
+  }
+
+  /** Per ordinal sequence, the (min, max) `offset` the topic holds: keyed
+    * by shard on a `publishPartitioned` topic, by -1 otherwise; empty for
+    * a missing, file-less or zero-row topic, or one without an `offset`
+    * column (a raw `publishStream` sink). Exactly what a
+    * `groupBy(shard).agg(min, max)` scan returns, but read from parquet
+    * footers on the driver: no Spark job, no row read. Only a footer that
+    * lacks `offset` statistics sends the call to that scan (logged once
+    * per topic). */
+  def offsetBounds(spark: SparkSession, topicDir: String): Map[Int, (Long, Long)] = {
+    val (hfs, p) = fs(spark, topicDir)
+    if (!hfs.exists(p)) return Map.empty
+    val cached = Option(footerCache.get(topicDir)).getOrElse(Map.empty[String, FileOffsets])
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val ignoreCorrupt = spark.sessionState.conf.ignoreCorruptFiles
+    val current = dataFiles(hfs, p).flatMap { case (st, shard) =>
+      val key = st.getPath.toString
+      cached.get(key)
+        .filter(f => f.len == st.getLen && f.mtime == st.getModificationTime)
+        .orElse(readFileOffsets(conf, st, shard, ignoreCorrupt))
+        .map(key -> _)
+    }.toMap
+    footerCache.put(topicDir, current)
+    if (current.valuesIterator.exists(!_.statsComplete)) {
+      if (scanFallbackLogged.add(topicDir)) System.err.println(
+        s"[graft] $topicDir: a parquet footer has no offset statistics; " +
+          "offset bounds fall back to a column scan")
+      return scanOffsetBounds(spark, topicDir)
+    }
+    current.valuesIterator.flatMap(f => f.range.map(f.shard -> _)).toSeq
+      .groupMapReduce(_._1)(_._2) { case ((a, b), (c, d)) => (math.min(a, c), math.max(b, d)) }
+  }
+
+  /** Current high-water mark (last assigned offset); -1 for empty/new.
+    * The max over [[offsetBounds]]: footer statistics, no Spark job. */
+  def highWaterMark(spark: SparkSession, topicDir: String): Long =
+    offsetBounds(spark, topicDir).valuesIterator.map(_._2).maxOption.getOrElse(-1L)
+
+  /** High-water mark per ordinal sequence (shard, or -1 unsharded). */
+  private[graft] def shardHighWaterMarks(spark: SparkSession, topicDir: String): Map[Int, Long] =
+    offsetBounds(spark, topicDir).map { case (sh, (_, hi)) => sh -> hi }
 
   /** Dense global ordinals in `(ts, event_id)` order WITHOUT a
     * single-partition stage: a parallel range-partitioned sort (the
@@ -232,8 +354,8 @@ object Topic {
     * leader).
     *
     * @param knownHighWaterMark pass the current hwm when the caller just
-    *   read it (e.g. Cascade.ingestValue's admission check) to avoid a
-    *   second footer-stats job per publish.
+    *   read it (e.g. Cascade.ingestValue's admission check) to skip a
+    *   second listing per publish.
     */
   /** Columns the publish paths add — excluded from the event-schema
     * compatibility check. */
@@ -452,15 +574,7 @@ object Topic {
     checkSchemaCompatible(spark, topicDir, events.schema)
     // per-shard high-water marks so repeated publishes continue each
     // shard's dense ordinal sequence instead of restarting at 0
-    val (hfs, p) = fs(spark, topicDir)
-    val bases: Map[Int, Long] =
-      if (!hfs.exists(p)) Map.empty
-      else try spark.read.parquet(topicDir)
-        .groupBy("shard").agg(max(col("offset")).as("hwm"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // existing-but-empty dir (e.g. a failed job's leftovers): same
-      // fallback highWaterMark uses, so both publish paths are robust
-      catch { case _: org.apache.spark.sql.AnalysisException => Map.empty[Int, Long] }
+    val bases = shardHighWaterMarks(spark, topicDir)
     val baseCol = bases.foldLeft(lit(-1L)) { case (acc, (sh, hwm)) =>
       when(col("shard") === sh, lit(hwm)).otherwise(acc)
     }
@@ -661,14 +775,9 @@ object Topic {
       // ordinal sequence (global, or per shard when sharded)
       val floors: Map[Option[Int], Long] = maxEvents match {
         case None => Map.empty
-        case Some(n) =>
-          if (sharded)
-            src.groupBy("shard").agg(max(col("offset")).as("hwm")).collect()
-              .map(r => Option(r.getInt(0)) -> (r.getLong(1) - n + 1L)).toMap
-          else {
-            val hwm = src.agg(max(col("offset"))).head().getLong(0)
-            Map((None: Option[Int]) -> (hwm - n + 1L))
-          }
+        case Some(n) => shardHighWaterMarks(spark, topicDir).map { case (sh, hwm) =>
+          (if (sh >= 0) Some(sh) else None) -> (hwm - n + 1L)
+        }
       }
       def floorOf(shard: Option[Int]): Long =
         floors.getOrElse(shard, Long.MinValue)
@@ -830,17 +939,9 @@ object Topic {
           MirrorReport(copied, srcHwm, srcHwm)
         }
       } else {
-        // per-shard floors, same collect-bounded control-plane shape as
-        // publishPartitioned's bases (shard count, never row scale)
-        def hwms(dir: String): Map[Int, Long] = {
-          val (hfs, p) = fs(spark, dir)
-          if (!hfs.exists(p)) Map.empty
-          else try spark.read.parquet(dir)
-            .groupBy("shard").agg(max(col("offset")).as("hwm"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          catch { case _: org.apache.spark.sql.AnalysisException => Map.empty[Int, Long] }
-        }
-        val srcH = hwms(sourceDir); val tgtH = hwms(mirrorDir)
+        // offsets are dense per shard, so each shard has its own hwm
+        val srcH = shardHighWaterMarks(spark, sourceDir)
+        val tgtH = shardHighWaterMarks(spark, mirrorDir)
         tgtH.foreach { case (sh, h) =>
           if (h > srcH.getOrElse(sh, -1L)) throw new IllegalStateException(
             s"mirror $mirrorDir has diverged from $sourceDir on shard $sh: " +

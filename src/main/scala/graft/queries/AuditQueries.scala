@@ -71,7 +71,7 @@ object AuditQueries {
         .groupBy("digit").agg(count(lit(1)).as("n"))
       val t = dg.agg(sum(col("n")).as("total"))
       val e = benfordBp.toDF("digit", "expected_bp")
-      broadcast(e).join(dg, Seq("digit"), "left")
+      e.join(dg, Seq("digit"), "left")
         .crossJoin(broadcast(t))
         .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
                 expr("(coalesce(n, 0) * 10000) div total").as("share_bp"),

@@ -219,6 +219,21 @@ class CascadeSpec extends SparkSpec {
       Seq(25L, 26L))
   }
 
+  test("lag on a zero-row topic reports high_water_mark -1") {
+    val root = Files.createTempDirectory("cascade-empty").toString
+    val c    = new Cascade(spark, root)
+    // a topic whose only data file holds no rows: it exists (requireTopic
+    // passes) but has no head, which lag must report, not dereference
+    Tables.events(spark, sf).limit(0).withColumn("offset", lit(0L))
+      .write.parquet(s"$root/empty")
+    val r = c.lag("g", "empty").collect()
+    assert(r.length === 1)
+    assert(r.head.getAs[Int]("shard") === -1)
+    assert(r.head.getAs[Long]("committed_next") === 0L)
+    assert(r.head.getAs[Long]("high_water_mark") === -1L)
+    assert(r.head.getAs[Long]("lag") === 0L)
+  }
+
   test("sliding windows double-count each event across two panes") {
     val dir = Files.createTempDirectory("slide").toString + "/t"
     Tables.events(spark, sf).limit(400).repartition(2).write.parquet(dir)
