@@ -99,7 +99,7 @@ object Bench {
         val ev = Tables.events(spark, sfDir).localCheckpoint(true)
         val nEv = ev.count()
         val tp0 = System.nanoTime()
-        Topic.publish(ev, s"$dir/t", knownHighWaterMark = Some(-1L))
+        Topic.publish(ev, s"$dir/t")
         val pubSec = (System.nanoTime() - tp0) / 1e9
         val tc0 = System.nanoTime()
         val nRead = Topic.consume(spark, s"$dir/t", 0L, nEv.toInt).count()

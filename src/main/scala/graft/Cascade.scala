@@ -46,19 +46,17 @@ final class Cascade(spark: SparkSession, root: String) {
     // an existing-but-empty dir (failed job leftovers) is NOT a topic:
     // letting it through would crash schema inference downstream with a
     // raw AnalysisException instead of this clean contract error. Data
-    // entries are files or shard=N dirs; `_`/`.`-prefixed entries are
-    // markers Spark ignores too.
-    require(hfs.exists(p) && hfs.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }, s"topic not found: $topic")
+    // entries are files or shard=N dirs, not the entries Spark's file
+    // index hides.
+    require(hfs.exists(p) && hfs.listStatus(p).exists(st => !Topic.hiddenName(st.getPath.getName)),
+      s"topic not found: $topic")
   }
 
   /** Consume from an event-time position — the `startingTimestamp`
     * analogue (offset predicate + time predicate both prune parquet). */
   def consumeSince(topic: String, since: java.sql.Timestamp): DataFrame = {
     requireTopic(topic)
-    spark.read.parquet(dir(topic)).filter(col("ts") >= lit(since)).orderBy("offset")
+    Topic.mergedRead(spark, dir(topic)).filter(col("ts") >= lit(since)).orderBy("offset")
   }
 
   /** Coordinator metadata: registered topics (directories). Hadoop-FS so
@@ -93,7 +91,7 @@ final class Cascade(spark: SparkSession, root: String) {
     * registration record, generalized). */
   def describe(topic: String): DataFrame = {
     requireTopic(topic)
-    spark.read.parquet(dir(topic))
+    Topic.mergedRead(spark, dir(topic))
       .agg(count(lit(1)).as("n_events"),
            max(col("offset")).as("high_water_mark"),
            min(col("ts")).as("earliest"),
@@ -120,10 +118,7 @@ final class Cascade(spark: SparkSession, root: String) {
     * empty when the group has never committed for this topic. */
   def committedOffsets(group: String, topic: String): Map[Int, Long] = {
     val (hfs, p) = Topic.fs(spark, groupPath(group, topic).toString)
-    if (!hfs.exists(p)) Map.empty
-    else {
-      val in  = hfs.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    Topic.readText(hfs, p).fold(Map.empty[Int, Long]) { txt =>
       org.json4s.jackson.JsonMethods.parse(txt) match {
         case org.json4s.JObject(fields) => fields.map {
           case (k, org.json4s.JInt(v))  => k.toInt -> v.toLong
@@ -138,18 +133,9 @@ final class Cascade(spark: SparkSession, root: String) {
   }
 
   private def writeOffsets(group: String, topic: String, m: Map[Int, Long]): Unit = {
-    val p = groupPath(group, topic)
-    val (hfs, _) = Topic.fs(spark, p.toString)
-    if (!hfs.exists(p.getParent)) hfs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = hfs.create(tmp, true)
-    try out.writeBytes(
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
-    finally out.close()
-    hfs.delete(p, false)
-    if (!hfs.rename(tmp, p)) throw new java.io.IOException(
-      s"failed to persist group offsets for $group/$topic")
+    val (hfs, p) = Topic.fs(spark, groupPath(group, topic).toString)
+    Topic.writeAtomic(hfs, p,
+      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
   }
 
   // ---- maintenance epoch × consumer groups ------------------------------
@@ -177,14 +163,12 @@ final class Cascade(spark: SparkSession, root: String) {
 
   private def pinnedGroupEpoch(group: String, topic: String): Option[Long] = {
     val (hfs, p) = Topic.fs(spark, groupEpochPath(group, topic).toString)
-    if (hfs.exists(p)) Some(Topic.readEpochFile(hfs, p)) else None
+    Topic.readEpoch(hfs, p)
   }
 
   private def pinGroupEpoch(group: String, topic: String): Unit = {
-    val p = groupEpochPath(group, topic)
-    val (hfs, _) = Topic.fs(spark, p.toString)
-    if (!hfs.exists(p.getParent)) hfs.mkdirs(p.getParent)
-    Topic.writeEpochFile(hfs, p, Topic.maintenanceEpoch(spark, dir(topic)))
+    val (hfs, p) = Topic.fs(spark, groupEpochPath(group, topic).toString)
+    Topic.writeAtomic(hfs, p, Topic.maintenanceEpoch(spark, dir(topic)).toString)
   }
 
   private def requireGroupEpoch(group: String, topic: String): Unit = {
@@ -399,7 +383,7 @@ final class Cascade(spark: SparkSession, root: String) {
   def offsetsForTimes(topic: String, ts: java.sql.Timestamp,
                       tsCol: String = "ts"): Map[Int, Long] = {
     requireTopic(topic)
-    val log = spark.read.parquet(dir(topic))
+    val log = Topic.mergedRead(spark, dir(topic))
     require(log.columns.contains(tsCol),
       s"offsetsForTimes: no '$tsCol' column on $topic (has ${log.columns.mkString(", ")})")
     val eligible = log.filter(col(tsCol) >= lit(ts))
@@ -430,10 +414,7 @@ final class Cascade(spark: SparkSession, root: String) {
     * first rebalance. */
   def assignment(group: String, topic: String): (Long, Map[String, Seq[Int]]) = {
     val (hfs, p) = Topic.fs(spark, membershipPath(group, topic).toString)
-    if (!hfs.exists(p)) (0L, Map.empty)
-    else {
-      val in  = hfs.open(p)
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    Topic.readText(hfs, p).fold((0L, Map.empty[String, Seq[Int]])) { txt =>
       val j = org.json4s.jackson.JsonMethods.parse(txt)
       val gen = (j \ "generation") match {
         case org.json4s.JInt(v)  => v.toLong
@@ -494,18 +475,10 @@ final class Cascade(spark: SparkSession, root: String) {
       m -> shards.slice(start, start + len)
     }.toMap
     val gen = assignment(group, topic)._1 + 1
-    val p = membershipPath(group, topic)
-    val (hfs, _) = Topic.fs(spark, p.toString)
-    if (!hfs.exists(p.getParent)) hfs.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val body = assigned.toSeq.sortBy(_._1).map { case (m, ss) =>
+    val (hfs, p) = Topic.fs(spark, membershipPath(group, topic).toString)
+    Topic.writeAtomic(hfs, p, assigned.toSeq.sortBy(_._1).map { case (m, ss) =>
       s""""$m":${ss.mkString("[", ",", "]")}"""
-    }.mkString(s"""{"generation":$gen,"members":{""", ",", "}}")
-    val out = hfs.create(tmp, true)
-    try out.writeBytes(body) finally out.close()
-    hfs.delete(p, false)
-    if (!hfs.rename(tmp, p)) throw new java.io.IOException(
-      s"failed to persist membership for $group/$topic")
+    }.mkString(s"""{"generation":$gen,"members":{""", ",", "}}"))
     (gen, assigned)
   }
 
@@ -549,8 +522,9 @@ final class Cascade(spark: SparkSession, root: String) {
       // event-time stamping belongs to the producer (R8); deterministic
       // here: derive from the ordinal rather than wall clock
       .withColumn("ts", timestamp_micros(col("event_id")))
-    // reuse the hwm from the admission check — no second footer scan
-    Topic.publish(df, dir(topic), knownHighWaterMark = Some(hwm))
+    // the admission check is a gate only: publish re-reads the base
+    // under the lock, so a publish racing this one cannot reuse offsets
+    Topic.publish(df, dir(topic))
     true
   }
 
@@ -673,14 +647,9 @@ final class Cascade(spark: SparkSession, root: String) {
   private def appendMarkerLine(txnId: String, line: String): Unit = {
     val (hfs, _) = Topic.fs(spark, root)
     val p = txnPath(txnId, "open")
-    val in = hfs.open(p)
-    val existing = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = hfs.create(tmp, true)
-    try out.writeBytes(existing + line + "\n") finally out.close()
-    hfs.delete(p, false)
-    if (!hfs.rename(tmp, p)) throw new java.io.IOException(
-      s"failed to record txn range for $txnId")
+    val existing = Topic.readText(hfs, p).getOrElse(
+      throw new java.io.FileNotFoundException(s"transaction $txnId is no longer open: $p"))
+    Topic.writeAtomic(hfs, p, existing + line + "\n")
   }
 
   /** Kafka's LAST STABLE OFFSET for a topic: the offset below which every
@@ -702,9 +671,8 @@ final class Cascade(spark: SparkSession, root: String) {
   private def openRangeFirsts(topic: String): Seq[(String, Long)] = {
     val (hfs, _) = Topic.fs(spark, root)
     listTxns("open").flatMap { id =>
-      val in = hfs.open(txnPath(id, "open"))
-      val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      txt.split('\n').collect {
+      // a marker decided since the listing holds no open range
+      Topic.readText(hfs, txnPath(id, "open")).getOrElse("").split('\n').collect {
         case l if l.startsWith("range ") =>
           val Array(_, t, first, _) = l.split(' ')
           (t, first.toLong)
@@ -780,16 +748,8 @@ final class Cascade(spark: SparkSession, root: String) {
     require(nextOffset >= 0, s"offset must be >= 0: $nextOffset")
     val p = txnPath(txnId, "offsets.json")
     val (hfs, _) = Topic.fs(spark, root)
-    val existing =
-      if (!hfs.exists(p)) ""
-      else { val in = hfs.open(p); try new String(in.readAllBytes(), "UTF-8") finally in.close() }
     val line = s"""{"group":"$group","topic":"$topic","shard":${shard.getOrElse(-1)},"offset":$nextOffset}"""
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = hfs.create(tmp, true)
-    try out.writeBytes(existing + line + "\n") finally out.close()
-    hfs.delete(p, false)
-    if (!hfs.rename(tmp, p)) throw new java.io.IOException(
-      s"failed to stage txn offsets for $txnId")
+    Topic.writeAtomic(hfs, p, Topic.readText(hfs, p).getOrElse("") + line + "\n")
   }
 
   /** Commit: ONE atomic rename makes every row of the transaction, in
@@ -836,9 +796,7 @@ final class Cascade(spark: SparkSession, root: String) {
   private def applyTxnOffsets(txnId: String): Unit = {
     val (hfs, _) = Topic.fs(spark, root)
     val p = txnPath(txnId, "offsets.json")
-    if (!hfs.exists(p)) return
-    val in = hfs.open(p)
-    val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val txt = Topic.readText(hfs, p).getOrElse(return)
     txt.split("\n").filter(_.nonEmpty).foreach { line =>
       org.json4s.jackson.JsonMethods.parse(line) match {
         case org.json4s.JObject(f) =>
@@ -869,7 +827,7 @@ final class Cascade(spark: SparkSession, root: String) {
     * writes reads through unchanged. */
   def readCommitted(topic: String): DataFrame = {
     requireTopic(topic)
-    val df = spark.read.option("mergeSchema", "true").parquet(dir(topic))
+    val df = Topic.mergedRead(spark, dir(topic))
     if (!df.columns.contains("txn_id")) df
     else {
       import spark.implicits._
@@ -910,7 +868,7 @@ final class Cascade(spark: SparkSession, root: String) {
     if (abortedIds.isEmpty) return 0L
     val t = dir(topic)
     Topic.withPublishLock(spark, t) {
-      val src = spark.read.option("mergeSchema", "true").parquet(t)
+      val src = Topic.mergedRead(spark, t)
       if (!src.columns.contains("txn_id")) 0L
       else {
         val before = src.count()

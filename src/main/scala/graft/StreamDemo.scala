@@ -19,7 +19,7 @@ object StreamDemo {
     //    through the reference-shaped client facade
     val cascade = new Cascade(spark, base)
     cascade.publish("topic", Tables.events(spark, sfDir))
-    println(s"TOPIC rows: ${spark.read.parquet(s"$base/topic").count()}")
+    println(s"TOPIC rows: ${Topic.openReader(spark, s"$base/topic").count()}")
     println("CONSUME offset 4: " +
       cascade.consume("topic", 4)
         .select("event_id", "event_type").collect().mkString)
@@ -47,7 +47,7 @@ object StreamDemo {
     val acks = (1 to 5).map(v => if (cascade.ingestLive("live", v, capacity = 4)) 1 else 0)
     live.processAllAvailable(); live.stop()
     println(s"LIVE acks: ${acks.mkString(",")} (5th rejected: ring full)")
-    println(s"LIVE drained rows: ${spark.read.parquet(s"$base/live").count()}")
+    println(s"LIVE drained rows: ${Topic.openReader(spark, s"$base/live").count()}")
 
     // 2. stream it back out, rate-limited, exactly-once (R1-R3 + R10)
     EventStream.publishStream(
@@ -100,7 +100,7 @@ object StreamDemo {
     //    the offset-carrying topic is the compactable log (raw stream
     //    sinks have no ordinals)
     Topic.compact(spark, s"$base/topic", "user_id")
-    println(s"COMPACTED topic rows: ${spark.read.parquet(s"$base/topic").count()}")
+    println(s"COMPACTED topic rows: ${Topic.openReader(spark, s"$base/topic").count()}")
 
     // 8. multimodal: binary assets → per-partition decode → kind stats
     val feats = graft.operators.Multimodal.decode(

@@ -53,6 +53,33 @@ object Topic {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  // ---- control files ------------------------------------------------------
+  // Epoch markers, group offsets, membership and transaction markers are
+  // small text files, read whole and replaced whole through these two.
+
+  /** A control file's text, or None when it does not exist. */
+  private[graft] def readText(hfs: org.apache.hadoop.fs.FileSystem,
+                              p: org.apache.hadoop.fs.Path): Option[String] =
+    if (!hfs.exists(p)) None
+    else {
+      val in = hfs.open(p)
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
+
+  /** Replace a control file: write `<p>.tmp` (creating the parent dir),
+    * delete `p`, rename the tmp into place. Atomic on a rename-capable
+    * FS, except that a crash between the delete and the rename leaves
+    * only the tmp. */
+  private[graft] def writeAtomic(hfs: org.apache.hadoop.fs.FileSystem,
+                                 p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    if (!hfs.exists(p.getParent)) hfs.mkdirs(p.getParent)
+    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
+    val out = hfs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    hfs.delete(p, false)
+    if (!hfs.rename(tmp, p)) throw new java.io.IOException(s"failed to write $p")
+  }
+
   // ---- maintenance epoch --------------------------------------------------
   // The generation marker that turns the "don't run compact/retain under a
   // live stream" scaladoc caveat into an ENFORCED contract (round-7 verdict
@@ -67,29 +94,16 @@ object Topic {
   private def epochPath(topicDir: String) =
     new org.apache.hadoop.fs.Path(topicDir, "_maintenance_epoch")
 
-  private[graft] def readEpochFile(hfs: org.apache.hadoop.fs.FileSystem,
-                                   p: org.apache.hadoop.fs.Path): Long =
-    if (!hfs.exists(p)) 0L
-    else {
-      val in = hfs.open(p)
-      try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-    }
-
-  private[graft] def writeEpochFile(hfs: org.apache.hadoop.fs.FileSystem,
-                                    p: org.apache.hadoop.fs.Path, v: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    val out = hfs.create(tmp, true)
-    try out.writeBytes(v.toString) finally out.close()
-    hfs.delete(p, false)
-    if (!hfs.rename(tmp, p))
-      throw new java.io.IOException(s"failed to write epoch marker $p")
-  }
+  /** An epoch marker's value; None when the marker does not exist. */
+  private[graft] def readEpoch(hfs: org.apache.hadoop.fs.FileSystem,
+                               p: org.apache.hadoop.fs.Path): Option[Long] =
+    readText(hfs, p).map(_.trim.toLong)
 
   /** Maintenance generation of a topic: 0 until the first destructive
     * pass, bumped by every [[compact]] and row-dropping [[retain]]. */
   def maintenanceEpoch(spark: SparkSession, topicDir: String): Long = {
     val (hfs, _) = fs(spark, topicDir)
-    readEpochFile(hfs, epochPath(topicDir))
+    readEpoch(hfs, epochPath(topicDir)).getOrElse(0L)
   }
 
   // ---- offset bounds from parquet footers ---------------------------------
@@ -115,26 +129,27 @@ object Topic {
     * (`HadoopFSUtils.shouldFilterOutPathName`, minus the `_metadata`
     * summary files, which are never data): `_temporary/`,
     * `_retain-tmp-*`, markers and `.crc` files are not read. */
-  private def hiddenName(name: String): Boolean =
+  private[graft] def hiddenName(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
 
-  /** The data files Spark's scan reads under a topic dir, each with its
-    * shard (-1 unsharded). Files under a `shard=` value that is not an
-    * int (a null shard) are left out: no ordinal sequence addresses them,
-    * as `Cascade.rebalance` ignores them too. A `listStatus` walk, not
-    * `listFiles`: on the local filesystem the latter forks a process per
-    * file to fill in permissions. */
+  /** Every file Spark's file index reads under a topic dir — the one
+    * listing of a topic's files — each with its shard: Some(-1)
+    * unsharded, None under a `shard=` value that is not an int (a null
+    * shard, which no ordinal sequence addresses). A `listStatus` walk,
+    * not a recursive `FileSystem` listing: on the local filesystem the
+    * latter forks a process per file to fill in permissions. */
   private def dataFiles(hfs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
-      : Seq[(org.apache.hadoop.fs.FileStatus, Int)] = {
-    def walk(dir: org.apache.hadoop.fs.Path, shard: Int): Seq[(org.apache.hadoop.fs.FileStatus, Int)] =
+      : Seq[(org.apache.hadoop.fs.FileStatus, Option[Int])] = {
+    def walk(dir: org.apache.hadoop.fs.Path, shard: Option[Int])
+        : Seq[(org.apache.hadoop.fs.FileStatus, Option[Int])] =
       hfs.listStatus(dir).toSeq.filterNot(st => hiddenName(st.getPath.getName)).flatMap { st =>
         val name = st.getPath.getName
-        if (!st.isDirectory) { if (st.getLen > 0) Seq(st -> shard) else Nil }
+        if (!st.isDirectory) Seq(st -> shard)
         else if (!name.startsWith("shard=")) walk(st.getPath, shard)
-        else name.stripPrefix("shard=").toIntOption.toSeq.flatMap(walk(st.getPath, _))
+        else walk(st.getPath, name.stripPrefix("shard=").toIntOption)
       }
-    walk(root, -1)
+    walk(root, Some(-1))
   }
 
   /** Read one footer's `offset` statistics; None when the file is corrupt
@@ -176,9 +191,7 @@ object Topic {
   /** The fallback for footers without `offset` statistics: the column
     * scan, grouped like the footer path. */
   private def scanOffsetBounds(spark: SparkSession, topicDir: String): Map[Int, (Long, Long)] = {
-    val log =
-      try spark.read.parquet(topicDir)
-      catch { case _: org.apache.spark.sql.AnalysisException => return Map.empty }
+    val log = mergedLog(spark, topicDir).getOrElse(return Map.empty)
     if (!log.columns.contains("offset")) return Map.empty
     val key = if (log.columns.contains("shard")) col("shard") else lit(-1)
     log.groupBy(key.as("k")).agg(min(col("offset")), max(col("offset"))).collect()
@@ -201,12 +214,15 @@ object Topic {
     val cached = Option(footerCache.get(topicDir)).getOrElse(Map.empty[String, FileOffsets])
     lazy val conf = spark.sessionState.newHadoopConf()
     val ignoreCorrupt = spark.sessionState.conf.ignoreCorruptFiles
-    val current = dataFiles(hfs, p).flatMap { case (st, shard) =>
-      val key = st.getPath.toString
-      cached.get(key)
-        .filter(f => f.len == st.getLen && f.mtime == st.getModificationTime)
-        .orElse(readFileOffsets(conf, st, shard, ignoreCorrupt))
-        .map(key -> _)
+    // a null shard's files and zero-byte files hold no addressable offset
+    val current = dataFiles(hfs, p).flatMap {
+      case (st, Some(shard)) if st.getLen > 0 =>
+        val key = st.getPath.toString
+        cached.get(key)
+          .filter(f => f.len == st.getLen && f.mtime == st.getModificationTime)
+          .orElse(readFileOffsets(conf, st, shard, ignoreCorrupt))
+          .map(key -> _)
+      case _ => None
     }.toMap
     footerCache.put(topicDir, current)
     if (current.valuesIterator.exists(!_.statsComplete)) {
@@ -337,26 +353,6 @@ object Topic {
     }
   }
 
-  /** Append a batch of events, assigning dense offsets after the current
-    * high-water mark. Batch-internal order is `(ts, event_id)` — the total
-    * order SURVEY.md §7.4 fixes for the reference's single-log semantics.
-    * Ordinal assignment is the parallel sort + zipWithIndex of
-    * `assignOffsets`: rows land range-partitioned and sorted, so each
-    * written file covers a disjoint offset range and parquet min/max
-    * stats still prune point reads to one file.
-    *
-    * SINGLE WRITER PER TOPIC, now enforced by [[withPublishLock]]: the
-    * hwm read-modify-write runs under the topic's lock file, so a
-    * concurrent publisher gets a loud IllegalStateException instead of
-    * silently duplicating offsets (the reference has the same contract
-    * implicitly — its file mutexes serialize one process, nothing
-    * coordinates across brokers; Kafka's answer is one partition
-    * leader).
-    *
-    * @param knownHighWaterMark pass the current hwm when the caller just
-    *   read it (e.g. Cascade.ingestValue's admission check) to skip a
-    *   second listing per publish.
-    */
   /** Columns the publish paths add — excluded from the event-schema
     * compatibility check. */
   private val PublishMetaCols = Set("offset", "producer_id", "producer_seq", "shard", "txn_id")
@@ -420,46 +416,33 @@ object Topic {
                                            incoming: org.apache.spark.sql.types.StructType): Unit =
     mergedSchema(spark, topicDir).foreach(checkSchemaAgainst(_, incoming, topicDir))
 
-  /** Merged-schema cache: topicDir → (listing fingerprint, schema).
+  /** Merged-schema cache: topicDir → (file-set fingerprint, schema).
     *
-    * The schema-evolution contract makes every consume path merge-aware,
-    * but a NAIVE `mergeSchema=true` read per point read is an
-    * all-footers pass whose cost grows with the number of log files —
-    * O(parts) per call on the hot path. The merged schema only changes
-    * when the file set changes, so we key a process-local cache on a
-    * recursive listing fingerprint (count, max mtime, total bytes):
-    * one cheap metadata listing per read (which planning does anyway),
-    * the footer-merge job only when the log actually changed — including
+    * The schema-evolution contract makes every whole-log read
+    * merge-aware, but resolving the merged schema is an all-footers
+    * Spark job whose cost grows with the number of log files. The merged
+    * schema only changes when the file set changes, so the cache is keyed
+    * on a fingerprint of [[dataFiles]] — the files Spark's scan reads —
+    * as (count, max mtime, total bytes): one `listStatus` walk per read,
+    * the footer-merge job only when the log actually changed, including
     * changes made by OTHER processes, which a publish-invalidated cache
-    * would miss. At 100 TB the same role is played by a schema sidecar
-    * or catalog entry; the fingerprint cache is the offline-exact form.
+    * would miss. Files Spark skips (`_temporary/`, `_retain-tmp-*`,
+    * markers) do not move the fingerprint. At 100 TB the same role is
+    * played by a schema sidecar or catalog entry; the fingerprint cache
+    * is the offline-exact form.
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
 
-  private def listingFingerprint(hfs: org.apache.hadoop.fs.FileSystem,
-                                 p: org.apache.hadoop.fs.Path): String = {
-    var n = 0L; var maxM = 0L; var bytes = 0L
-    val it = hfs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        n += 1; bytes += st.getLen
-        if (st.getModificationTime > maxM) maxM = st.getModificationTime
-      }
-    }
-    s"$n:$maxM:$bytes"
-  }
-
   /** The topic's merged (union-over-footers) schema, or None for a
-    * missing/empty dir. Cached per listing fingerprint — see above. */
+    * missing/empty dir. Cached per file-set fingerprint — see above. */
   private[graft] def mergedSchema(spark: SparkSession,
                                   topicDir: String): Option[org.apache.spark.sql.types.StructType] = {
     val (hfs, p) = fs(spark, topicDir)
     if (!hfs.exists(p)) return None
-    val fp = listingFingerprint(hfs, p)
-    if (fp.startsWith("0:")) return None // dir with no data files
+    val files = dataFiles(hfs, p).map(_._1)
+    if (files.isEmpty) return None
+    val fp = s"${files.size}:${files.map(_.getModificationTime).max}:${files.map(_.getLen).sum}"
     val cached = schemaCache.get(topicDir)
     if (cached != null && cached._1 == fp) return Some(cached._2)
     val schema =
@@ -472,18 +455,38 @@ object Topic {
   /** Merge-aware read of the topic log WITHOUT a per-call footer pass:
     * resolve the merged schema through the cache, then read with it
     * explicitly (files missing a widened column fill it with null —
-    * parquet's standard missing-column semantics, identical to what
-    * `mergeSchema=true` produces). Returns None for missing/empty. */
+    * parquet's standard missing-column semantics, the same rows a
+    * footer-merging read produces). Returns None for missing/empty. */
   private[graft] def mergedLog(spark: SparkSession, topicDir: String): Option[DataFrame] =
     mergedSchema(spark, topicDir).map(s => spark.read.schema(s).parquet(topicDir))
 
-  def publish(events: DataFrame, topicDir: String,
-              knownHighWaterMark: Option[Long] = None): Unit = {
+  /** The one whole-log read: [[mergedLog]], and for a missing or
+    * file-less dir a plain read, which fails as a read of a missing
+    * topic always has. */
+  private[graft] def mergedRead(spark: SparkSession, topicDir: String): DataFrame =
+    mergedLog(spark, topicDir).getOrElse(spark.read.parquet(topicDir))
+
+  /** Append a batch of events, assigning dense offsets after the current
+    * high-water mark. Batch-internal order is `(ts, event_id)` — the total
+    * order SURVEY.md §7.4 fixes for the reference's single-log semantics.
+    * Ordinal assignment is the parallel sort + zipWithIndex of
+    * `assignOffsets`: rows land range-partitioned and sorted, so each
+    * written file covers a disjoint offset range and parquet min/max
+    * stats still prune point reads to one file.
+    *
+    * SINGLE WRITER PER TOPIC, enforced by [[withPublishLock]]: the hwm
+    * read-modify-write runs under the topic's lock file — the base is
+    * always read under the lock — so a concurrent publisher gets a loud
+    * IllegalStateException instead of silently duplicating offsets (the
+    * reference has the same contract implicitly — its file mutexes
+    * serialize one process, nothing coordinates across brokers; Kafka's
+    * answer is one partition leader).
+    */
+  def publish(events: DataFrame, topicDir: String): Unit = {
     val spark = events.sparkSession
     withPublishLock(spark, topicDir) {
       checkSchemaCompatible(spark, topicDir, events.schema)
-      val base = knownHighWaterMark.getOrElse(highWaterMark(spark, topicDir)) + 1L
-      assignOffsets(events, base)
+      assignOffsets(events, highWaterMark(spark, topicDir) + 1L)
         .write.mode(SaveMode.Append).parquet(topicDir)
     }
   }
@@ -593,17 +596,7 @@ object Topic {
     * moral equivalent of the reference's two index seeks.
     */
   def consume(spark: SparkSession, topicDir: String, from: Long, count: Int = 1): DataFrame =
-    mergedRead(spark, topicDir)
-      .filter(col("offset") >= from && col("offset") < from + count)
-      .orderBy("offset")
-
-  /** Merge-aware read for the point-read paths: served by the
-    * fingerprint-keyed schema cache, so a hot consumer pays one file
-    * listing per call instead of an all-footers merge pass (the listing
-    * happens during planning regardless). Errors like a plain read on a
-    * missing dir. */
-  private def mergedRead(spark: SparkSession, topicDir: String): DataFrame =
-    mergedLog(spark, topicDir).getOrElse(spark.read.parquet(topicDir))
+    consumeVia(mergedRead(spark, topicDir), from, count)
 
   /** A RESIDENT reader over a topic: resolve the parquet relation (file
     * listing + schema) ONCE and serve every subsequent point/batch read
@@ -630,10 +623,7 @@ object Topic {
     */
   def consumeShard(spark: SparkSession, topicDir: String, shard: Int,
                    from: Long, count: Int = 1): DataFrame =
-    mergedRead(spark, topicDir)
-      .filter(col("shard") === shard &&
-              col("offset") >= from && col("offset") < from + count)
-      .orderBy("offset")
+    consumeVia(mergedRead(spark, topicDir).filter(col("shard") === shard), from, count)
 
   /** Log compaction — the Kafka feature the reference lacks entirely
     * (SURVEY.md §1.2: "no keys/compaction"): keep only the LATEST event
@@ -663,7 +653,7 @@ object Topic {
               dropTombstones: Boolean = false): Unit = withPublishLock(spark, topicDir) {
     // merge-aware: compacting a schema-widened topic must carry the new
     // column into the rewritten log, not silently drop it
-    val src = spark.read.option("mergeSchema", "true").parquet(topicDir)
+    val src = mergedRead(spark, topicDir)
     require(src.columns.contains(orderCol),
       s"compact needs ordering column '$orderCol' — raw stream sinks " +
         "(publishStream) carry no offsets; compact those by event_id")
@@ -701,12 +691,10 @@ object Topic {
     // epoch is written INTO the replacement before the swap — any stream
     // whose listing sees the compacted files necessarily sees the new
     // epoch — and a mirror's _source_epoch pin is carried across
-    writeEpochFile(hfs, new org.apache.hadoop.fs.Path(tmp, "_maintenance_epoch"),
-                   readEpochFile(hfs, epochPath(topicDir)) + 1L)
-    val srcPin = new org.apache.hadoop.fs.Path(topicDir, "_source_epoch")
-    if (hfs.exists(srcPin))
-      writeEpochFile(hfs, new org.apache.hadoop.fs.Path(tmp, "_source_epoch"),
-                     readEpochFile(hfs, srcPin))
+    writeAtomic(hfs, new org.apache.hadoop.fs.Path(tmp, "_maintenance_epoch"),
+                (maintenanceEpoch(spark, topicDir) + 1L).toString)
+    readEpoch(hfs, new org.apache.hadoop.fs.Path(topicDir, "_source_epoch")).foreach(e =>
+      writeAtomic(hfs, new org.apache.hadoop.fs.Path(tmp, "_source_epoch"), e.toString))
     val old = new org.apache.hadoop.fs.Path(topicDir + ".compact.old")
     hfs.delete(old, true) // clear any previous failed swap's leftovers
     if (!hfs.rename(p, old))
@@ -769,7 +757,7 @@ object Topic {
       "retain needs a policy: minEventTime (time) and/or maxEvents (size)")
     withPublishLock(spark, topicDir) {
       // merge-aware for the same reason as compact: retention rewrites
-      val src     = spark.read.option("mergeSchema", "true").parquet(topicDir)
+      val src     = mergedRead(spark, topicDir)
       val sharded = src.columns.contains("shard")
       // offset floor from the size policy: hwm - maxEvents + 1, per
       // ordinal sequence (global, or per shard when sharded)
@@ -808,8 +796,7 @@ object Topic {
         (allExpired, noneExpired)
       }
       if (stats.exists { r => val (all, none) = classify(r); all || !none })
-        writeEpochFile(hfs, epochPath(topicDir),
-                       readEpochFile(hfs, epochPath(topicDir)) + 1L)
+        writeAtomic(hfs, epochPath(topicDir), (maintenanceEpoch(spark, topicDir) + 1L).toString)
       stats.foreach { r =>
         val file  = r.getString(0)
         val shard = if (r.isNullAt(1)) None else Some(r.getInt(1))
@@ -905,16 +892,17 @@ object Topic {
       val (mfs, _) = fs(spark, mirrorDir)
       val srcPinP  = new org.apache.hadoop.fs.Path(mirrorDir, "_source_epoch")
       val srcEpoch = maintenanceEpoch(spark, sourceDir)
-      if (mfs.exists(srcPinP)) {
-        val pinnedEpoch = readEpochFile(mfs, srcPinP)
-        if (srcEpoch != pinnedEpoch) throw new IllegalStateException(
+      readEpoch(mfs, srcPinP) match {
+        case Some(pinnedEpoch) if pinnedEpoch != srcEpoch => throw new IllegalStateException(
           s"mirror $mirrorDir: source $sourceDir underwent maintenance (epoch " +
             s"$srcEpoch; mirror pinned $pinnedEpoch) — the mirror may hold rows " +
             "the source dropped, which the hwm check cannot see. Either re-seed " +
             "the mirror (delete and re-mirror for an exact replica) or call " +
             "Topic.acceptSourceMaintenance to re-pin and keep the mirror as a " +
             "superset archive (it reports the divergence it accepted).")
-      } else writeEpochFile(mfs, srcPinP, srcEpoch)
+        case Some(_) => ()
+        case None    => writeAtomic(mfs, srcPinP, srcEpoch.toString)
+      }
       val sharded = src.columns.contains("shard")
       if (!sharded) {
         val srcHwm = highWaterMark(spark, sourceDir)
@@ -1004,8 +992,8 @@ object Topic {
   def acceptSourceMaintenance(spark: SparkSession, sourceDir: String, mirrorDir: String): Long = {
     val div = mirrorDivergence(spark, sourceDir, mirrorDir)
     val (mfs, _) = fs(spark, mirrorDir)
-    writeEpochFile(mfs, new org.apache.hadoop.fs.Path(mirrorDir, "_source_epoch"),
-                   maintenanceEpoch(spark, sourceDir))
+    writeAtomic(mfs, new org.apache.hadoop.fs.Path(mirrorDir, "_source_epoch"),
+                maintenanceEpoch(spark, sourceDir).toString)
     div
   }
 
@@ -1067,10 +1055,9 @@ object Topic {
         case Some(cp) =>
           val (cfs, cpp) = fs(spark, cp)
           val pinP = new org.apache.hadoop.fs.Path(cpp, "graft-topic-epoch")
-          if (cfs.exists(pinP)) readEpochFile(cfs, pinP)
-          else {
+          readEpoch(cfs, pinP).getOrElse {
             val e = maintenanceEpoch(spark, topicDir)
-            cfs.mkdirs(cpp); writeEpochFile(cfs, pinP, e); e
+            writeAtomic(cfs, pinP, e.toString); e
           }
       }
       // executors re-read the marker themselves: serialize the resolved
@@ -1104,7 +1091,7 @@ object Topic {
     * compaction.
     */
   def fsck(spark: SparkSession, topicDir: String): FsckReport = {
-    val log = spark.read.option("mergeSchema", "true").parquet(topicDir)
+    val log = mergedRead(spark, topicDir)
     val sharded = log.columns.contains("shard")
     val keyCols = if (sharded) Seq(col("shard")) else Seq(lit(0).as("shard"))
     val per = log.groupBy(keyCols: _*)
@@ -1118,15 +1105,8 @@ object Topic {
            min(col("mn")), max(col("mx")))
       .head()
     val (hfs, p) = fs(spark, topicDir)
-    var nFiles = 0L
-    val it = hfs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val nm = st.getPath.getName
-      if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) nFiles += 1
-    }
     val dups = per.getLong(1)
-    FsckReport(nFiles, per.getLong(0), per.getLong(3), per.getLong(4),
+    FsckReport(dataFiles(hfs, p).size.toLong, per.getLong(0), per.getLong(3), per.getLong(4),
                dups, per.getLong(2), ok = dups == 0L)
   }
 
@@ -1169,7 +1149,7 @@ private[graft] class EpochGuard(
     val conf = new org.apache.hadoop.conf.Configuration()
     hadoopConf.foreach { case (k, v) => conf.set(k, v) }
     val p = new org.apache.hadoop.fs.Path(topicDir, "_maintenance_epoch")
-    val cur = Topic.readEpochFile(p.getFileSystem(conf), p)
+    val cur = Topic.readEpoch(p.getFileSystem(conf), p).getOrElse(0L)
     if (cur != pinned) throw new IllegalStateException(
       s"topic $topicDir underwent maintenance (epoch $cur; this stream pinned " +
         s"$pinned): compact/retain rewrote segments the file source would " +

@@ -61,12 +61,11 @@ class TopicCatalog extends TableCatalog {
     s"$root/${ident.name}"
   }
 
+  /** The topics `Cascade.topics` lists: control-plane dirs (`_groups`,
+    * `_txns`) are not tables. */
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     require(namespace.isEmpty, "topic catalog has a flat namespace")
-    val (hfs, p) = graft.Topic.fs(spark, root)
-    if (!hfs.exists(p)) Array.empty
-    else hfs.listStatus(p).filter(_.isDirectory)
-      .map(st => Identifier.of(Array.empty, st.getPath.getName))
+    new graft.Cascade(spark, root).topics().map(Identifier.of(Array.empty, _)).toArray
   }
 
   override def tableExists(ident: Identifier): Boolean = {

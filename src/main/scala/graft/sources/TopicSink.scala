@@ -38,15 +38,16 @@ class TopicSink extends CreatableRelationProvider with DataSourceRegister {
     val path = parameters.getOrElse("path",
       throw new IllegalArgumentException(
         "graft-topic sink requires .option(\"path\", <topicDir>) or save(<topicDir>)"))
+    // the mode checks are gates; publish reads its base under the lock
     val hwm = Topic.highWaterMark(data.sparkSession, path)
     mode match {
       case SaveMode.Append => Topic.publish(data, path)
       case SaveMode.ErrorIfExists =>
         if (hwm >= 0L) throw new IllegalStateException(
           s"topic '$path' already holds offsets 0..$hwm (mode ErrorIfExists)")
-        Topic.publish(data, path, knownHighWaterMark = Some(-1L))
+        Topic.publish(data, path)
       case SaveMode.Ignore =>
-        if (hwm < 0L) Topic.publish(data, path, knownHighWaterMark = Some(-1L))
+        if (hwm < 0L) Topic.publish(data, path)
       case SaveMode.Overwrite =>
         throw new UnsupportedOperationException(
           "graft-topic is an append-only log: Overwrite is not a write mode; " +

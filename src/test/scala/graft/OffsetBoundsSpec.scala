@@ -16,7 +16,8 @@ import org.scalacheck.rng.Seed
   * compaction, a zero-row file, a leftover retention temp dir, corrupt
   * parts and footers without statistics. Topics are built from seeded
   * ScalaCheck `Gen`s, as in `PropertySpec`. The last test pins the gain:
-  * the hwm, a commit and a poll's set-up launch no Spark job.
+  * the hwm, a commit, a poll's set-up and the whole-log frames of a warm
+  * topic launch no Spark job.
   */
 class OffsetBoundsSpec extends SparkSpec {
 
@@ -200,8 +201,23 @@ class OffsetBoundsSpec extends SparkSpec {
     // listing-keyed cache; warm it, so the count sees only poll's own work
     Topic.consume(spark, dir, 0L)
     val (polled, pollJobs) = jobsDuring(c.poll("g", "t", 5))
+    // the other whole-log frames resolve their schema through the same
+    // warm cache: building them launches nothing
+    val (_, committedJobs) = jobsDuring(c.readCommitted("t"))
+    val (_, sinceJobs) = jobsDuring(c.consumeSince("t", new java.sql.Timestamp(0L)))
+    val (_, describeJobs) = jobsDuring(c.describe("t"))
+    // a writer's in-flight `_temporary/` output is not a file Spark reads,
+    // so it must not invalidate the schema cache
+    val part = new java.io.File(dir).listFiles().find(_.getName.startsWith("part-")).get
+    Files.createDirectories(Paths.get(dir, "_temporary", "0"))
+    Files.copy(part.toPath, Paths.get(dir, "_temporary", "0", part.getName))
+    val (_, tempJobs) = jobsDuring(Topic.consume(spark, dir, 0L))
     val jobs = Seq("Topic.highWaterMark" -> hwmJobs, "Cascade.commitOffset" -> commitJobs,
-                   "Cascade.poll before its consume" -> pollJobs)
+                   "Cascade.poll before its consume" -> pollJobs,
+                   "Cascade.readCommitted frame" -> committedJobs,
+                   "Cascade.consumeSince frame" -> sinceJobs,
+                   "Cascade.describe frame" -> describeJobs,
+                   "Topic.consume frame after a _temporary/ file" -> tempJobs)
     assert(jobs.forall(_._2 == 0), s"Spark jobs launched: ${jobs.mkString(", ")}")
     assert(hwm === 89L)
     assert(polled.collect().map(_.getAs[Long]("offset")).toSeq === (20L until 25L))

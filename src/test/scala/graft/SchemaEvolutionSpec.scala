@@ -136,6 +136,22 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(after.count() == 2)
   }
 
+  test("consumeSince, readCommitted and describe read a widened topic whole") {
+    val root = freshTopic()
+    val c = new Cascade(spark, root)
+    c.publish("t", batch(0 until 20))
+    c.publish("t", batch(20 until 30).withColumn("schema_v", lit(2)))
+    Seq("consumeSince" -> c.consumeSince("t", new java.sql.Timestamp(0L)),
+        "readCommitted" -> c.readCommitted("t")).foreach { case (what, df) =>
+      assert(df.columns.contains("schema_v"), s"$what: ${df.columns.mkString(",")}")
+      assert(df.count() == 30, what)
+      assert(df.filter(col("schema_v").isNull).count() == 20, s"$what: old rows must read null")
+    }
+    val d = c.describe("t").head()
+    assert(d.getAs[Long]("n_events") == Topic.mergedRead(spark, s"$root/t").count())
+    assert(d.getAs[Long]("high_water_mark") == 29L)
+  }
+
   test("streaming publish enforces the contract at start") {
     // publishStream is the third append path into a topic dir; without
     // the start-time check it would be the hole through which a

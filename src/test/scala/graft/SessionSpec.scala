@@ -15,15 +15,37 @@ class SessionSpec extends SparkSpec {
     assert(spark.sparkContext.appName === "graft-test")
   }
 
-  test("src/main builds a SparkSession in the factory only") {
-    val root = Paths.get("src/main/scala")
+  private val root = Paths.get("src/main/scala")
+
+  /** Every Scala source under `src/main`. */
+  private def mainSources(): List[Path] = {
     assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
-    val files = scala.util.Using.resource(Files.walk(root))(
+    scala.util.Using.resource(Files.walk(root))(
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+  }
+
+  test("src/main builds a SparkSession in the factory only") {
+    val files = mainSources()
     val builder = """SparkSession\s*\.\s*builder""".r
     def builds(p: Path): Boolean =
       builder.findFirstIn(Files.readString(p)).isDefined
     assert(files.filter(builds).map(root.relativize(_).toString) ===
       Seq("graft/Session.scala"))
+  }
+
+  test("src/main merges footer schemas in Topic.mergedSchema only, and lists no topic recursively") {
+    def hits(p: Path, s: String): Seq[Int] =
+      Files.readAllLines(p).asScala.zipWithIndex.collect { case (l, i) if l.contains(s) => i }.toSeq
+    val topic = root.resolve("graft/Topic.scala")
+    val lines = Files.readAllLines(topic).asScala
+    val start = lines.indexWhere(_.contains("def mergedSchema("))
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    assert(start >= 0 && end > start, "Topic.mergedSchema not found")
+    val merges = mainSources().flatMap(p => hits(p, "mergeSchema").map(root.relativize(p).toString -> _))
+    assert(merges.nonEmpty && merges.forall { case (f, i) =>
+      f == "graft/Topic.scala" && i > start && i < end }, s"mergeSchema outside mergedSchema: $merges")
+    val recursive = Seq("graft/Topic.scala", "graft/Cascade.scala")
+      .filter(f => hits(root.resolve(f), "listFiles(").nonEmpty)
+    assert(recursive.isEmpty, s"listFiles( in $recursive")
   }
 }

@@ -47,7 +47,8 @@ class TopicCatalogSpec extends SparkSpec {
   }
 
   test("discovery: SHOW TABLES lists every topic under the root") {
-    root
+    // a group commit creates `_groups/` under the root: control plane, not a topic
+    new Cascade(spark, root).commitOffset("g", "clicks", 1L)
     val names = spark.sql("SHOW TABLES IN graft").select("tableName")
       .collect().map(_.getString(0)).toSet
     assert(names == Set("clicks", "purchases"), names.mkString(","))

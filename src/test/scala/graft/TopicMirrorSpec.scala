@@ -107,8 +107,12 @@ class TopicMirrorSpec extends SparkSpec {
     val dir = tmpDir() + "/t"
     val ev  = Tables.events(spark, sf).limit(120).localCheckpoint(true)
     Topic.publish(ev, dir)
+    // a crashed retention's temp output: Spark does not read it, so fsck
+    // does not count it
+    spark.range(3).select(col("id").as("offset")).write.parquet(s"$dir/_retain-tmp-x")
     val clean = Topic.fsck(spark, dir)
     assert(clean.ok && clean.duplicates === 0L && clean.gaps === 0L)
+    assert(clean.files === spark.read.parquet(dir).inputFiles.length.toLong)
     assert(clean.rows === 120L && clean.minOffset === 0L && clean.maxOffset === 119L)
 
     // compaction removes arbitrary offsets: interior gaps expected
