@@ -248,7 +248,8 @@ final class Cascade(spark: SparkSession, root: String) {
     * poll resumes from the earliest survivor instead of returning an
     * empty frame forever. The earliest offset comes from
     * [[Topic.offsetBounds]]'s footer stats: no Spark job before the
-    * consume itself.
+    * consume itself, and an unsharded poll of a small batch is read on
+    * the driver by [[Topic.consume]], so collecting it launches none.
     *
     * `onMaintenance` is the group's declared recovery policy when the
     * topic's maintenance epoch moved past its pin (see

@@ -99,7 +99,8 @@ final class CascadeRpc(spark: SparkSession, cascade: Cascade, topic: String,
 
   override def send(request: ConsumeDataFromBroker): BrokerToConsumerAck = {
     // number = log ordinal (the broker's two index seeks → here a
-    // stats-pruned point read); one event per call, like the reference —
+    // footer-indexed point read on the driver, no Spark job); one event
+    // per call, like the reference —
     // the proto's repeated Event leaves room for the batched form
     // (Cascade.consumeBatch), which the reference never implemented
     val rows = cascade.consume(topic, request.number.toLong)

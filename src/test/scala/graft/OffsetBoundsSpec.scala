@@ -16,8 +16,9 @@ import org.scalacheck.rng.Seed
   * compaction, a zero-row file, a leftover retention temp dir, corrupt
   * parts and footers without statistics. Topics are built from seeded
   * ScalaCheck `Gen`s, as in `PropertySpec`. The last test pins the gain:
-  * the hwm, a commit, a poll's set-up and the whole-log frames of a warm
-  * topic launch no Spark job.
+  * the hwm, a commit, a collected poll, collected point and batch reads
+  * and the whole-log frames of a warm topic launch no Spark job, while a
+  * whole-log-sized consume still does.
   */
 class OffsetBoundsSpec extends SparkSpec {
 
@@ -200,7 +201,12 @@ class OffsetBoundsSpec extends SparkSpec {
     // the consume frame poll returns resolves its schema through the
     // listing-keyed cache; warm it, so the count sees only poll's own work
     Topic.consume(spark, dir, 0L)
-    val (polled, pollJobs) = jobsDuring(c.poll("g", "t", 5))
+    // small reads are served on the driver: collect included, no job
+    val (polled, pollJobs) = jobsDuring(c.poll("g", "t", 5).collect())
+    val (point, pointJobs) = jobsDuring(Topic.consume(spark, dir, 42L).collect())
+    val (_, batchJobs) = jobsDuring(Topic.consume(spark, dir, 0L, 1000).collect())
+    // a whole-log read of Bench's size stays on the scan
+    val (_, bigJobs) = jobsDuring(Topic.consume(spark, dir, 0L, 100000).collect())
     // the other whole-log frames resolve their schema through the same
     // warm cache: building them launches nothing
     val (_, committedJobs) = jobsDuring(c.readCommitted("t"))
@@ -213,13 +219,17 @@ class OffsetBoundsSpec extends SparkSpec {
     Files.copy(part.toPath, Paths.get(dir, "_temporary", "0", part.getName))
     val (_, tempJobs) = jobsDuring(Topic.consume(spark, dir, 0L))
     val jobs = Seq("Topic.highWaterMark" -> hwmJobs, "Cascade.commitOffset" -> commitJobs,
-                   "Cascade.poll before its consume" -> pollJobs,
+                   "Cascade.poll, collected" -> pollJobs,
+                   "Topic.consume of one event, collected" -> pointJobs,
+                   "Topic.consume of 1000 events, collected" -> batchJobs,
                    "Cascade.readCommitted frame" -> committedJobs,
                    "Cascade.consumeSince frame" -> sinceJobs,
                    "Cascade.describe frame" -> describeJobs,
                    "Topic.consume frame after a _temporary/ file" -> tempJobs)
     assert(jobs.forall(_._2 == 0), s"Spark jobs launched: ${jobs.mkString(", ")}")
+    assert(bigJobs > 0, "a 100k-event consume must keep the scan")
     assert(hwm === 89L)
-    assert(polled.collect().map(_.getAs[Long]("offset")).toSeq === (20L until 25L))
+    assert(polled.map(_.getAs[Long]("offset")).toSeq === (20L until 25L))
+    assert(point.map(_.getAs[Long]("offset")).toSeq === Seq(42L))
   }
 }
