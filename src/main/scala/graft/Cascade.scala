@@ -599,7 +599,7 @@ final class Cascade(spark: SparkSession, root: String) {
   private def txnStates(txnId: String): Set[String] = {
     val (hfs, _) = Topic.fs(spark, root)
     Seq("open", "committed", "aborted")
-      .filter(s => hfs.exists(txnPath(txnId, s))).toSet
+      .filter(s => Topic.controlFile(hfs, txnPath(txnId, s)).nonEmpty).toSet
   }
 
   /** Open a transaction. Transaction ids are caller-chosen and single
@@ -715,7 +715,7 @@ final class Cascade(spark: SparkSession, root: String) {
     val open = openRangeFirsts(topic).map(_._1).distinct
     val (stale, live) = open.partition { id =>
       openTxnTtlMs != Long.MaxValue &&
-        now - hfs.getFileStatus(txnPath(id, "open")).getModificationTime > openTxnTtlMs
+        now - openedAt(hfs, id) > openTxnTtlMs
     }
     if (live.nonEmpty) throw new IllegalStateException(
       s"retain($topic) blocked at LSO ${lastStableOffset(topic)}: open " +
@@ -764,7 +764,7 @@ final class Cascade(spark: SparkSession, root: String) {
       case s if s.contains("aborted") =>
         throw new IllegalStateException(s"transaction $txnId was aborted")
       case s if s.contains("open") =>
-        if (!hfs.rename(txnPath(txnId, "open"), txnPath(txnId, "committed")))
+        if (!Topic.renameControl(hfs, txnPath(txnId, "open"), txnPath(txnId, "committed")))
           throw new java.io.IOException(s"failed to commit transaction $txnId")
         applyTxnOffsets(txnId)
       case _ => throw new IllegalStateException(s"unknown transaction $txnId")
@@ -780,7 +780,7 @@ final class Cascade(spark: SparkSession, root: String) {
       case s if s.contains("committed") =>
         throw new IllegalStateException(s"transaction $txnId already committed")
       case s if s.contains("open") =>
-        if (!hfs.rename(txnPath(txnId, "open"), txnPath(txnId, "aborted")))
+        if (!Topic.renameControl(hfs, txnPath(txnId, "open"), txnPath(txnId, "aborted")))
           throw new java.io.IOException(s"failed to abort transaction $txnId")
       case _ => throw new IllegalStateException(s"unknown transaction $txnId")
     }
@@ -790,9 +790,14 @@ final class Cascade(spark: SparkSession, root: String) {
     val (hfs, _) = Topic.fs(spark, root)
     val d = new org.apache.hadoop.fs.Path(s"$root/_txns")
     if (!hfs.exists(d)) Seq.empty
-    else hfs.listStatus(d).map(_.getPath.getName)
-      .filter(_.endsWith(s".$state")).map(_.stripSuffix(s".$state")).toSeq.sorted
+    else hfs.listStatus(d).map(_.getPath.getName.stripSuffix(".old")) // see Topic.controlFile
+      .filter(_.endsWith(s".$state")).map(_.stripSuffix(s".$state")).toSeq.distinct.sorted
   }
+
+  /** When an open transaction's marker was last written. */
+  private def openedAt(hfs: org.apache.hadoop.fs.FileSystem, txnId: String): Long =
+    Topic.controlFile(hfs, txnPath(txnId, "open")).fold(Long.MaxValue)(
+      hfs.getFileStatus(_).getModificationTime)
 
   private def applyTxnOffsets(txnId: String): Unit = {
     val (hfs, _) = Topic.fs(spark, root)
@@ -817,7 +822,7 @@ final class Cascade(spark: SparkSession, root: String) {
     }
     // applied marker: a later recoverTxns must not regress the group to
     // these (possibly superseded) positions
-    if (!hfs.rename(p, txnPath(txnId, "offsets.applied")))
+    if (!Topic.renameControl(hfs, p, txnPath(txnId, "offsets.applied")))
       throw new java.io.IOException(s"failed to mark txn offsets applied for $txnId")
   }
 
@@ -848,13 +853,13 @@ final class Cascade(spark: SparkSession, root: String) {
     val (hfs, _) = Topic.fs(spark, root)
     val now = System.currentTimeMillis()
     val aborted = listTxns("open").filter { id =>
-      now - hfs.getFileStatus(txnPath(id, "open")).getModificationTime > ttlMs
+      now - openedAt(hfs, id) > ttlMs
     }.map { id =>
       System.err.println(s"[graft] aborting stale transaction $id (writer presumed dead)")
       abortTxn(id); id
     }
     val reapplied = listTxns("committed").filter { id =>
-      hfs.exists(txnPath(id, "offsets.json"))
+      Topic.controlFile(hfs, txnPath(id, "offsets.json")).nonEmpty
     }.map { id => applyTxnOffsets(id); id }
     (aborted, reapplied)
   }

@@ -59,30 +59,60 @@ object Topic {
 
   // ---- control files ------------------------------------------------------
   // Epoch markers, group offsets, membership and transaction markers are
-  // small text files, read whole and replaced whole through these two.
+  // small text files, read whole and replaced whole through these helpers.
+  // A replace keeps the previous text at `<p>.old` until the new text is
+  // in place at `p`, so after a crash at any step the current text is at
+  // `p`, or at `<p>.old` when `p` is missing; `<p>.tmp` is never read.
+
+  private def oldPath(p: org.apache.hadoop.fs.Path) =
+    new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".old")
+
+  /** The file holding a control file's current text: `p`, or `<p>.old`
+    * when a replace stopped between moving `p` aside and renaming the new
+    * text in; None when the control file does not exist. */
+  private[graft] def controlFile(hfs: org.apache.hadoop.fs.FileSystem,
+                                 p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
+    Seq(p, oldPath(p)).find(hfs.exists)
 
   /** A control file's text, or None when it does not exist. */
   private[graft] def readText(hfs: org.apache.hadoop.fs.FileSystem,
                               p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!hfs.exists(p)) None
-    else {
-      val in = hfs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    controlFile(hfs, p).map { f =>
+      val in = hfs.open(f)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
     }
 
   /** Replace a control file: write `<p>.tmp` (creating the parent dir),
-    * delete `p`, rename the tmp into place. Atomic on a rename-capable
-    * FS, except that a crash between the delete and the rename leaves
-    * only the tmp. */
+    * move `p` aside to `<p>.old`, rename the tmp into place, drop the
+    * `.old`. Every step is a create, rename to a free name or delete, so
+    * a reader sees the old text or the new after a crash at any point on
+    * any Hadoop filesystem; renaming over an existing file is never
+    * relied on. */
   private[graft] def writeAtomic(hfs: org.apache.hadoop.fs.FileSystem,
                                  p: org.apache.hadoop.fs.Path, text: String): Unit = {
     if (!hfs.exists(p.getParent)) hfs.mkdirs(p.getParent)
     val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
+    val old = oldPath(p)
     val out = hfs.create(tmp, true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
-    hfs.delete(p, false)
+    // with `p` present, a leftover `.old` is stale; without it, `.old` is
+    // the current text and stays until the new text is in place
+    if (hfs.exists(p)) {
+      hfs.delete(old, false)
+      if (!hfs.rename(p, old)) throw new java.io.IOException(s"failed to move $p aside")
+    }
     if (!hfs.rename(tmp, p)) throw new java.io.IOException(s"failed to write $p")
+    hfs.delete(old, false)
   }
+
+  /** Move a control file's current text to `dst` (a state change such as
+    * a transaction's open → committed), dropping a stale `<p>.old` first
+    * so it cannot read as current afterwards. */
+  private[graft] def renameControl(hfs: org.apache.hadoop.fs.FileSystem,
+                                   p: org.apache.hadoop.fs.Path,
+                                   dst: org.apache.hadoop.fs.Path): Boolean =
+    if (hfs.exists(p)) { hfs.delete(oldPath(p), false); hfs.rename(p, dst) }
+    else hfs.rename(oldPath(p), dst)
 
   // ---- maintenance epoch --------------------------------------------------
   // The generation marker that turns the "don't run compact/retain under a

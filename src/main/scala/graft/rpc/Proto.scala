@@ -7,8 +7,8 @@ import Wire._
 
 /** Hand-rolled proto3 WIRE-FORMAT codec for the five reference rpc
   * message pairs — the byte framing a reference client's compiled
-  * protobuf stubs produce, so the transport boundary matches not just
-  * the message CONTRACT ([[Wire]], JSON-framed in [[RpcServer]]) but
+  * protobuf stubs produce, so the transport boundary ([[RpcServer]],
+  * [[RpcClient]]) matches not just the message CONTRACT ([[Wire]]) but
   * the ENCODING. Field numbers and types come from the reference's
   * proto files:
   *
@@ -95,10 +95,12 @@ object Proto {
     }
     /** (fieldNumber, wireType) of the next tag. */
     def tag(): (Int, Int) = { val t = varint(); ((t >>> 3).toInt, (t & 7).toInt) }
+    /** Checked against the bytes left while still 64-bit, so a length of
+      * 2^32 or more fails instead of narrowing to its low 32 bits. */
     def lenDelim(): Array[Byte] = {
-      val n = varint().toInt
-      require(n >= 0 && pos + n <= b.length, s"malformed length $n at $pos")
-      val out = java.util.Arrays.copyOfRange(b, pos, pos + n); pos += n; out
+      val n = varint()
+      require(n >= 0 && n <= b.length - pos, s"malformed length $n at $pos")
+      val out = java.util.Arrays.copyOfRange(b, pos, pos + n.toInt); pos += n.toInt; out
     }
     /** Skip an unknown field by wire type — forward compatibility. Fixed
       * widths are bounds-checked so a truncated fixed64/fixed32 tail errors

@@ -3,9 +3,6 @@ package graft.rpc
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
-import org.json4s._
-import org.json4s.jackson.JsonMethods
-
 import Wire._
 
 /** TCP client for [[RpcServer]] implementing the same five Wire service
@@ -16,94 +13,60 @@ import Wire._
   * invisible to it, which is exactly the parity the process boundary
   * requires).
   *
-  * Contract mapping is the inverse of the server's: 404 → the facade's
-  * NoSuchElementException (unknown topic / missing offset), any other
-  * non-200 → IllegalStateException with the server's message.
+  * Every request and response crosses the socket as protobuf wire-format
+  * bytes ([[Proto]]) inside a gRPC length-prefixed frame, POSTed to the
+  * gRPC path `/<package>.<Service>/<Method>` — the byte stream a
+  * reference client's compiled stubs emit, over HTTP/1.1 instead of
+  * HTTP/2. Contract mapping is the inverse of the server's: 404 → the
+  * facade's NoSuchElementException (unknown topic / missing offset), any
+  * other non-200 → IllegalStateException with the server's text message.
   */
 final class RpcClient(host: String, port: Int)
     extends KafkaMetadataService with KafkaBrokerInitializationService
     with PublishToBroker with MyAPIService with ConsumeFromBroker {
 
-  override def send(request: BrokerInitializationRequest): BrokerInitializationResponse = {
-    val out = call("registerBroker", JObject(
-      "broker" -> JObject(
-        "id" -> JInt(request.broker.id),
-        "ip" -> JString(request.broker.ip),
-        "port" -> JInt(request.broker.port)),
-      "partition" -> JInt(request.partition),
-      "topicName" -> JString(request.topicName)))
-    BrokerInitializationResponse(
-      if (long(out \ "status") == 0) Ok else Error, str(out \ "message"))
-  }
+  override def send(request: BrokerInitializationRequest): BrokerInitializationResponse =
+    Proto.decBrokerInitializationResponse(
+      call("coordinate.KafkaBrokerInitializationService/Send",
+           Proto.encBrokerInitializationRequest(request)))
 
-  override def getMetadata(request: MetadataRequest): MetadataResponse = {
-    val out = call("getMetadata", JObject("topicName" -> JString(request.topicName)))
-    val brokers = (out \ "brokers") match {
-      case JArray(bs) => bs.map(b =>
-        Broker(long(b \ "id").toInt, str(b \ "ip"), long(b \ "port").toInt))
-      case other => throw new IllegalStateException(s"malformed brokers: $other")
-    }
-    MetadataResponse(brokers)
-  }
+  override def getMetadata(request: MetadataRequest): MetadataResponse =
+    Proto.decMetadataResponse(
+      call("coordinate.KafkaMetadataService/GetMetadata",
+           Proto.encMetadataRequest(request)))
 
-  override def send(request: PublishDataToBroker): BrokerToPublisherAck = {
-    val out = call("publish", JObject(
-      "eventName" -> JString(request.eventName),
-      "timestampUs" -> JInt(BigInt(RpcServer.usOf(request.timestamp))),
-      "number" -> JInt(request.number)))
-    BrokerToPublisherAck(str(out \ "responseToProducer"))
-  }
+  override def send(request: PublishDataToBroker): BrokerToPublisherAck =
+    Proto.decBrokerToPublisherAck(
+      call("publish.PublishToBroker/Send", Proto.encPublishDataToBroker(request)))
 
-  override def expressToProducer(request: ExpressDataToProducer): ProducerToExpressAck = {
-    val out = call("express", JObject("data" -> JInt(request.data)))
-    ProducerToExpressAck(long(out \ "responseToExpress").toInt)
-  }
+  override def expressToProducer(request: ExpressDataToProducer): ProducerToExpressAck =
+    Proto.decProducerToExpressAck(
+      call("publish.MyAPIService/ExpressToProducer",
+           Proto.encExpressDataToProducer(request)))
 
-  override def send(request: ConsumeDataFromBroker): BrokerToConsumerAck = {
-    val out = call("consume", JObject(
-      "eventName" -> JString(request.eventName),
-      "number" -> JInt(request.number)))
-    val events = (out \ "eventVec") match {
-      case JArray(es) => es.map(e =>
-        Event(str(e \ "eventName"), RpcServer.tsOf(long(e \ "timestampUs"))))
-      case other => throw new IllegalStateException(s"malformed eventVec: $other")
-    }
-    BrokerToConsumerAck(events)
-  }
+  override def send(request: ConsumeDataFromBroker): BrokerToConsumerAck =
+    Proto.decBrokerToConsumerAck(
+      call("consume.ConsumeFromBroker/Send",
+           Proto.encConsumeDataFromBroker(request)))
 
-  // ---- transport -------------------------------------------------------
+  // ---- transport ---------------------------------------------------------
 
-  private def call(rpcName: String, body: JValue): JValue = {
-    val conn = URI.create(s"http://$host:$port/rpc/$rpcName").toURL
+  private def call(path: String, msg: Array[Byte]): Array[Byte] = {
+    val conn = URI.create(s"http://$host:$port/$path").toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("POST")
     conn.setDoOutput(true)
-    conn.setRequestProperty("Content-Type", "application/json; charset=utf-8")
-    val bytes = JsonMethods.compact(JsonMethods.render(body))
-      .getBytes(StandardCharsets.UTF_8)
+    conn.setRequestProperty("Content-Type", "application/x-protobuf")
     val os = conn.getOutputStream
-    try os.write(bytes) finally os.close()
+    try os.write(Proto.grpcFrame(msg)) finally os.close()
     val status = conn.getResponseCode
-    val in = if (status >= 400) conn.getErrorStream else conn.getInputStream
-    val text =
-      if (in == null) ""
-      else try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
-    if (status == 200) JsonMethods.parse(text)
+    val in = if (status == 200) conn.getInputStream else conn.getErrorStream
+    val body = if (in == null) Array.emptyByteArray else try in.readAllBytes() finally in.close()
+    if (status == 200) Proto.grpcUnframe(body)
     else {
-      val msg =
-        try str(JsonMethods.parse(text) \ "message") catch { case _: Throwable => text }
-      if (status == 404) throw new NoSuchElementException(msg)
-      throw new IllegalStateException(s"rpc $rpcName failed ($status): $msg")
+      val text = new String(body, StandardCharsets.UTF_8)
+      if (status == 404) throw new NoSuchElementException(text)
+      throw new IllegalStateException(s"rpc $path failed ($status): $text")
     }
-  }
-
-  private def str(v: JValue): String = v match {
-    case JString(s) => s
-    case other => throw new IllegalStateException(s"expected string, got $other")
-  }
-  private def long(v: JValue): Long = v match {
-    case JInt(n) => n.toLong
-    case JLong(n) => n
-    case other => throw new IllegalStateException(s"expected number, got $other")
   }
 }

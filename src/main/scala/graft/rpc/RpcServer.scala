@@ -3,11 +3,7 @@ package graft.rpc
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.json4s._
-import org.json4s.jackson.JsonMethods
-
-import Wire._
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The five reference rpcs served over a REAL network listener — the
   * process boundary the reference's services actually have. The
@@ -18,27 +14,26 @@ import Wire._
   * boundary. This server puts every [[CascadeRpc]] method behind TCP so
   * a client talks to a listening port, not a JVM object.
   *
-  * Framing is JSON-over-HTTP on the JDK's `com.sun.net.httpserver` (the
-  * [[graft.sources.push.HttpIngress]] pattern — zero added deps; gRPC
-  * isn't resolvable offline, and the parity that matters is the MESSAGE
-  * CONTRACT crossing a socket, not the frame bytes). One endpoint per
-  * declared rpc, request/response bodies field-for-field the Wire
-  * messages:
+  * One framing, the reference's own: each request and response is a
+  * protobuf message ([[Proto]]) inside a gRPC length-prefixed frame,
+  * POSTed to the gRPC path `/<package>.<Service>/<Method>`. A reference
+  * client's compiled stubs produce exactly these request bytes and parse
+  * exactly these response bytes; the remaining delta to stock gRPC is the
+  * HTTP/2 transport (not resolvable offline), served here as HTTP/1.1 on
+  * the JDK's `com.sun.net.httpserver`:
   *
-  *   - POST /rpc/registerBroker   BrokerInitializationRequest → ...Response
-  *   - POST /rpc/getMetadata      MetadataRequest → MetadataResponse
-  *   - POST /rpc/publish          PublishDataToBroker → BrokerToPublisherAck
-  *   - POST /rpc/express          ExpressDataToProducer → ProducerToExpressAck
-  *   - POST /rpc/consume          ConsumeDataFromBroker → BrokerToConsumerAck
+  *   - /coordinate.KafkaBrokerInitializationService/Send
+  *   - /coordinate.KafkaMetadataService/GetMetadata
+  *   - /publish.PublishToBroker/Send
+  *   - /publish.MyAPIService/ExpressToProducer
+  *   - /consume.ConsumeFromBroker/Send
   *
-  * proto3 Timestamp crosses the wire as `timestampUs` (µs since epoch,
-  * the engine's event-time unit — lossless for everything the engine
-  * stores). StatusCode crosses as its proto enum NUMBER (0=OK 1=ERROR).
-  * Loud-fail semantics map to status codes: the facade's
-  * NoSuchElementException (unknown topic / missing offset — the
-  * reference panics on both) → 404 with the message in the body;
-  * anything else → 500. [[RpcClient]] maps 404 back to
-  * NoSuchElementException, so the contract is transport-invariant.
+  * Loud-fail semantics map to status codes, with the message as a UTF-8
+  * text body: the facade's NoSuchElementException (unknown topic /
+  * missing offset — the reference panics on both) → 404; a non-POST →
+  * 405; anything else, a malformed frame included → 500. [[RpcClient]]
+  * maps 404 back to NoSuchElementException, so the contract is
+  * transport-invariant.
   */
 final class RpcServer private (server: HttpServer) {
   /** Actual bound port (useful when started with port 0). */
@@ -50,152 +45,47 @@ object RpcServer {
 
   def start(rpc: CascadeRpc, port: Int = 0): RpcServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-
-    def endpoint(path: String)(fn: JValue => JValue): Unit =
-      server.createContext(path, new HttpHandler {
-        override def handle(ex: HttpExchange): Unit =
-          try {
-            if (ex.getRequestMethod != "POST") respond(ex, 405, text("Method Not Allowed"))
-            else {
-              val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-              val in =
-                try JsonMethods.parse(body)
-                catch { case _: Throwable => null }
-              if (in == null) respond(ex, 400, text("Bad Request: JSON body required"))
-              else respond(ex, 200, fn(in))
-            }
-          } catch {
-            case e: NoSuchElementException => respondSafe(ex, 404, text(e.getMessage))
-            case e: Throwable => respondSafe(ex, 500,
-              text(Option(e.getMessage).getOrElse("Internal Server Error")))
-          } finally ex.close()
-      })
-
-    endpoint("/rpc/registerBroker") { in =>
-      val r = rpc.send(BrokerInitializationRequest(
-        broker(in \ "broker"), int(in \ "partition"), str(in \ "topicName")))
-      JObject("status" -> JInt(r.status.code), "message" -> JString(r.message))
-    }
-
-    endpoint("/rpc/getMetadata") { in =>
-      val r = rpc.getMetadata(MetadataRequest(str(in \ "topicName")))
-      JObject("brokers" -> JArray(r.brokers.toList.map(b =>
-        JObject("id" -> JInt(b.id), "ip" -> JString(b.ip), "port" -> JInt(b.port)))))
-    }
-
-    endpoint("/rpc/publish") { in =>
-      val r = rpc.send(PublishDataToBroker(
-        str(in \ "eventName"), tsOf(long(in \ "timestampUs")), int(in \ "number")))
-      JObject("responseToProducer" -> JString(r.responseToProducer))
-    }
-
-    endpoint("/rpc/express") { in =>
-      val r = rpc.expressToProducer(ExpressDataToProducer(int(in \ "data")))
-      JObject("responseToExpress" -> JInt(r.responseToExpress))
-    }
-
-    endpoint("/rpc/consume") { in =>
-      val r = rpc.send(ConsumeDataFromBroker(str(in \ "eventName"), int(in \ "number")))
-      JObject("eventVec" -> JArray(r.eventVec.toList.map(e =>
-        JObject("eventName" -> JString(e.eventName),
-                "timestampUs" -> JInt(BigInt(usOf(e.timestamp)))))))
-    }
-
-    // ---- protobuf wire framing (the reference's actual encoding) --------
-    //
-    // Same five rpcs served BYTE-FRAMED per the protobuf wire format +
-    // gRPC's length-prefixed message framing, at the gRPC path convention
-    // `/<package>.<Service>/<Method>` (field numbers from the reference's
-    // proto files — see [[Proto]]). A reference client's compiled stubs
-    // produce exactly these request bytes and parse exactly these response
-    // bytes; the remaining delta to stock gRPC is the HTTP/2 transport
-    // (not resolvable offline), served here as HTTP/1.1 POSTs. Error
-    // mapping matches the JSON endpoints: unknown topic/offset → 404.
-
-    def protoEndpoint(path: String)(fn: Array[Byte] => Array[Byte]): Unit =
-      server.createContext(path, new HttpHandler {
-        override def handle(ex: HttpExchange): Unit =
-          try {
-            if (ex.getRequestMethod != "POST") respond(ex, 405, text("Method Not Allowed"))
-            else {
-              val body = Proto.grpcUnframe(ex.getRequestBody.readAllBytes())
-              val out = Proto.grpcFrame(fn(body))
-              ex.getResponseHeaders.set("Content-Type", "application/x-protobuf")
-              ex.sendResponseHeaders(200, out.length.toLong)
-              val os = ex.getResponseBody
-              try os.write(out) finally os.close()
-            }
-          } catch {
-            case e: NoSuchElementException => respondSafe(ex, 404, text(e.getMessage))
-            case e: Throwable => respondSafe(ex, 500,
-              text(Option(e.getMessage).getOrElse("Internal Server Error")))
-          } finally ex.close()
-      })
-
-    protoEndpoint("/coordinate.KafkaBrokerInitializationService/Send") { in =>
-      Proto.encBrokerInitializationResponse(
-        rpc.send(Proto.decBrokerInitializationRequest(in)))
-    }
-    protoEndpoint("/coordinate.KafkaMetadataService/GetMetadata") { in =>
-      Proto.encMetadataResponse(rpc.getMetadata(Proto.decMetadataRequest(in)))
-    }
-    protoEndpoint("/publish.PublishToBroker/Send") { in =>
-      Proto.encBrokerToPublisherAck(rpc.send(Proto.decPublishDataToBroker(in)))
-    }
-    protoEndpoint("/publish.MyAPIService/ExpressToProducer") { in =>
-      Proto.encProducerToExpressAck(
-        rpc.expressToProducer(Proto.decExpressDataToProducer(in)))
-    }
-    protoEndpoint("/consume.ConsumeFromBroker/Send") { in =>
-      Proto.encBrokerToConsumerAck(rpc.send(Proto.decConsumeDataFromBroker(in)))
-    }
-
+    val endpoints = Seq[(String, Array[Byte] => Array[Byte])](
+      "/coordinate.KafkaBrokerInitializationService/Send" -> (in =>
+        Proto.encBrokerInitializationResponse(
+          rpc.send(Proto.decBrokerInitializationRequest(in)))),
+      "/coordinate.KafkaMetadataService/GetMetadata" -> (in =>
+        Proto.encMetadataResponse(rpc.getMetadata(Proto.decMetadataRequest(in)))),
+      "/publish.PublishToBroker/Send" -> (in =>
+        Proto.encBrokerToPublisherAck(rpc.send(Proto.decPublishDataToBroker(in)))),
+      "/publish.MyAPIService/ExpressToProducer" -> (in =>
+        Proto.encProducerToExpressAck(
+          rpc.expressToProducer(Proto.decExpressDataToProducer(in)))),
+      "/consume.ConsumeFromBroker/Send" -> (in =>
+        Proto.encBrokerToConsumerAck(rpc.send(Proto.decConsumeDataFromBroker(in)))))
+    for ((path, call) <- endpoints)
+      server.createContext(path, (ex: HttpExchange) => handle(ex, call))
     server.start()
     new RpcServer(server)
   }
 
-  // ---- µs Timestamp codec (shared with RpcClient) ----------------------
+  /** Unframe, decode, call, encode, frame; a failure answers as status +
+    * text, and never lets a response failure mask the error. */
+  private def handle(ex: HttpExchange, call: Array[Byte] => Array[Byte]): Unit =
+    try {
+      if (ex.getRequestMethod != "POST") respondText(ex, 405, "Method Not Allowed")
+      else respond(ex, 200, "application/x-protobuf",
+        Proto.grpcFrame(call(Proto.grpcUnframe(ex.getRequestBody.readAllBytes()))))
+    } catch {
+      case e: Throwable =>
+        val status = if (e.isInstanceOf[NoSuchElementException]) 404 else 500
+        try respondText(ex, status, Option(e.getMessage).getOrElse("Internal Server Error"))
+        catch { case _: Throwable => () }
+    } finally ex.close()
 
-  private[rpc] def usOf(t: java.sql.Timestamp): Long =
-    t.getTime / 1000L * 1000000L + t.getNanos / 1000L
+  private def respondText(ex: HttpExchange, status: Int, msg: String): Unit =
+    respond(ex, status, "text/plain; charset=utf-8", msg.getBytes(StandardCharsets.UTF_8))
 
-  private[rpc] def tsOf(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  // ---- JSON field extractors (loud on shape mismatch → 500) ------------
-
-  private def str(v: JValue): String = v match {
-    case JString(s) => s
-    case other => throw new IllegalArgumentException(s"expected string, got $other")
-  }
-  private def int(v: JValue): Int = v match {
-    case JInt(n) => n.toInt
-    case JLong(n) => n.toInt
-    case other => throw new IllegalArgumentException(s"expected int, got $other")
-  }
-  private def long(v: JValue): Long = v match {
-    case JInt(n) => n.toLong
-    case JLong(n) => n
-    case other => throw new IllegalArgumentException(s"expected long, got $other")
-  }
-  private def broker(v: JValue): Broker =
-    Broker(int(v \ "id"), str(v \ "ip"), int(v \ "port"))
-
-  private def text(msg: String): JValue = JObject("message" -> JString(msg))
-
-  private def respond(ex: HttpExchange, status: Int, body: JValue): Unit = {
-    val bytes = JsonMethods.compact(JsonMethods.render(body))
-      .getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json; charset=utf-8")
-    ex.sendResponseHeaders(status, bytes.length.toLong)
+  private def respond(ex: HttpExchange, status: Int, contentType: String,
+                      body: Array[Byte]): Unit = {
+    ex.getResponseHeaders.set("Content-Type", contentType)
+    ex.sendResponseHeaders(status, body.length.toLong)
     val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
+    try os.write(body) finally os.close()
   }
-
-  /** Error-path respond: never let a response failure mask the error. */
-  private def respondSafe(ex: HttpExchange, status: Int, body: JValue): Unit =
-    try respond(ex, status, body) catch { case _: Throwable => () }
 }
