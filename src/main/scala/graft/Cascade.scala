@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /** The reference-shaped client API, so a cascade user can switch 1:1.
   *
@@ -119,10 +121,10 @@ final class Cascade(spark: SparkSession, root: String) {
   def committedOffsets(group: String, topic: String): Map[Int, Long] = {
     val (hfs, p) = Topic.fs(spark, groupPath(group, topic).toString)
     Topic.readText(hfs, p).fold(Map.empty[Int, Long]) { txt =>
-      org.json4s.jackson.JsonMethods.parse(txt) match {
-        case org.json4s.JObject(fields) => fields.map {
-          case (k, org.json4s.JInt(v))  => k.toInt -> v.toLong
-          case (k, org.json4s.JLong(v)) => k.toInt -> v
+      JsonMethods.parse(txt) match {
+        case JObject(fields) => fields.map {
+          case (k, JInt(v))  => k.toInt -> v.toLong
+          case (k, JLong(v)) => k.toInt -> v
           case (k, other) => throw new IllegalStateException(
             s"corrupt group state for $group/$topic at key $k: $other")
         }.toMap
@@ -416,17 +418,17 @@ final class Cascade(spark: SparkSession, root: String) {
   def assignment(group: String, topic: String): (Long, Map[String, Seq[Int]]) = {
     val (hfs, p) = Topic.fs(spark, membershipPath(group, topic).toString)
     Topic.readText(hfs, p).fold((0L, Map.empty[String, Seq[Int]])) { txt =>
-      val j = org.json4s.jackson.JsonMethods.parse(txt)
+      val j = JsonMethods.parse(txt)
       val gen = (j \ "generation") match {
-        case org.json4s.JInt(v)  => v.toLong
-        case org.json4s.JLong(v) => v
+        case JInt(v)  => v.toLong
+        case JLong(v) => v
         case other => throw new IllegalStateException(
           s"corrupt membership for $group/$topic: generation=$other")
       }
       val members = (j \ "members") match {
-        case org.json4s.JObject(fields) => fields.map {
-          case (m, org.json4s.JArray(shards)) => m -> shards.map {
-            case org.json4s.JInt(v) => v.toInt
+        case JObject(fields) => fields.map {
+          case (m, JArray(shards)) => m -> shards.map {
+            case JInt(v) => v.toInt
             case other => throw new IllegalStateException(
               s"corrupt membership for $group/$topic: shard=$other")
           }
@@ -477,9 +479,11 @@ final class Cascade(spark: SparkSession, root: String) {
     }.toMap
     val gen = assignment(group, topic)._1 + 1
     val (hfs, p) = Topic.fs(spark, membershipPath(group, topic).toString)
-    Topic.writeAtomic(hfs, p, assigned.toSeq.sortBy(_._1).map { case (m, ss) =>
-      s""""$m":${ss.mkString("[", ",", "]")}"""
-    }.mkString(s"""{"generation":$gen,"members":{""", ",", "}}"))
+    Topic.writeAtomic(hfs, p, Cascade.json(
+      "generation" -> JLong(gen),
+      "members" -> JObject(assigned.toList.sortBy(_._1).map { case (m, ss) =>
+        m -> JArray(ss.toList.map(JInt(_)))
+      })))
     (gen, assigned)
   }
 
@@ -587,7 +591,9 @@ final class Cascade(spark: SparkSession, root: String) {
   // txn and topic B doesn't. Offsets staged via `commitOffsetTxn`
   // apply AFTER the rename (idempotently, with an .applied marker;
   // `recoverTxns` re-drives a crash between rename and apply — the
-  // same convergent-recovery contract as Topic.retain).
+  // same convergent-recovery contract as Topic.retain). Aborted rows stay
+  // in the logs until `purgeAborted` drops them through Topic.dropRows,
+  // retain's file-granular pass.
   //
   // At 100 TB the committed-txn set is control-plane state (one
   // filename per txn, compacted periodically like __transaction_state);
@@ -749,7 +755,8 @@ final class Cascade(spark: SparkSession, root: String) {
     require(nextOffset >= 0, s"offset must be >= 0: $nextOffset")
     val p = txnPath(txnId, "offsets.json")
     val (hfs, _) = Topic.fs(spark, root)
-    val line = s"""{"group":"$group","topic":"$topic","shard":${shard.getOrElse(-1)},"offset":$nextOffset}"""
+    val line = Cascade.json("group" -> JString(group), "topic" -> JString(topic),
+      "shard" -> JInt(shard.getOrElse(-1): Int), "offset" -> JLong(nextOffset))
     Topic.writeAtomic(hfs, p, Topic.readText(hfs, p).getOrElse("") + line + "\n")
   }
 
@@ -804,13 +811,13 @@ final class Cascade(spark: SparkSession, root: String) {
     val p = txnPath(txnId, "offsets.json")
     val txt = Topic.readText(hfs, p).getOrElse(return)
     txt.split("\n").filter(_.nonEmpty).foreach { line =>
-      org.json4s.jackson.JsonMethods.parse(line) match {
-        case org.json4s.JObject(f) =>
+      JsonMethods.parse(line) match {
+        case JObject(f) =>
           val m = f.toMap
-          def str(k: String) = m(k).asInstanceOf[org.json4s.JString].s
+          def str(k: String) = m(k).asInstanceOf[JString].s
           def num(k: String) = m(k) match {
-            case org.json4s.JInt(v)  => v.toLong
-            case org.json4s.JLong(v) => v
+            case JInt(v)  => v.toLong
+            case JLong(v) => v
             case o => throw new IllegalStateException(s"corrupt txn offsets: $o")
           }
           val sh = num("shard") match { case -1L => None; case v => Some(v.toInt) }
@@ -865,35 +872,25 @@ final class Cascade(spark: SparkSession, root: String) {
   }
 
   /** Reclaim aborted transactions' rows from a topic (the cleanup
-    * Kafka's log cleaner does with abort markers): rewrites the topic
-    * keeping committed/non-txn rows, under the publish lock. At scale
-    * this runs file-granularly like Topic.retain; aborted rows are
-    * already invisible, so the rewrite is reclamation, not correctness. */
+    * Kafka's log cleaner does with abort markers) and return how many
+    * went: the rows whose `txn_id` is aborted drop through
+    * [[Topic.dropRows]], file-granularly like Topic.retain. Each
+    * `publishTxn` writes its own files, so the purge mostly deletes whole
+    * files. Aborted rows are already invisible, so this is reclamation,
+    * not correctness. */
   def purgeAborted(topic: String): Long = {
     val abortedIds = listTxns("aborted")
-    if (abortedIds.isEmpty) return 0L
-    val t = dir(topic)
-    Topic.withPublishLock(spark, t) {
-      val src = Topic.mergedRead(spark, t)
-      if (!src.columns.contains("txn_id")) 0L
-      else {
-        val before = src.count()
-        val keep = src.filter(col("txn_id").isNull ||
-                              !col("txn_id").isin(abortedIds: _*))
-        val tmp = s"$t-purge-tmp"
-        keep.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-        val (hfs, p) = Topic.fs(spark, t)
-        val after = spark.read.parquet(tmp).count()
-        hfs.delete(p, true)
-        if (!hfs.rename(new org.apache.hadoop.fs.Path(tmp), p))
-          throw new java.io.IOException(s"failed to swap purged topic $topic")
-        before - after
-      }
-    }
+    if (abortedIds.isEmpty ||
+        !Topic.mergedSchema(spark, dir(topic)).exists(_.fieldNames.contains("txn_id"))) 0L
+    else Topic.dropRows(spark, dir(topic))(col("txn_id").isin(abortedIds: _*)).rowsDropped
   }
 }
 
 object Cascade {
+  /** A one-line JSON object, names and strings escaped by json4s. */
+  private def json(fields: (String, JValue)*): String =
+    JsonMethods.compact(JObject(fields.toList))
+
   /** What a guarded retention pass did: the underlying file-granular
     * retention report plus any stale open transactions it TTL-aborted
     * to get there. */

@@ -134,7 +134,8 @@ object Topic {
     readText(hfs, p).map(_.trim.toLong)
 
   /** Maintenance generation of a topic: 0 until the first destructive
-    * pass, bumped by every [[compact]] and row-dropping [[retain]]. */
+    * pass, bumped by every [[compact]] and every [[dropRows]] pass that
+    * drops rows ([[retain]], `Cascade.purgeAborted`). */
   def maintenanceEpoch(spark: SparkSession, topicDir: String): Long = {
     val (hfs, _) = fs(spark, topicDir)
     readEpoch(hfs, epochPath(topicDir)).getOrElse(0L)
@@ -860,9 +861,9 @@ object Topic {
     hfs.delete(old, true)
   }
 
-  /** What a retention pass did: how many whole segment files were dropped
-    * (the cheap path), how many boundary files were rewritten, and the
-    * row accounting. */
+  /** What a row-dropping pass did: how many whole segment files were
+    * dropped (the cheap path), how many boundary files were rewritten,
+    * and the row accounting. */
   final case class RetentionReport(
       filesDeleted: Int, filesRewritten: Int,
       rowsDropped: Long, rowsSurviving: Long)
@@ -879,120 +880,110 @@ object Topic {
     *     per SHARD on a `publishPartitioned` topic, where offsets are
     *     dense per shard; that is Kafka's per-partition retention).
     *
-    * The 100 TB posture is FILE-granular: one column-pruned stats scan
-    * (per-file min/max of ts and offset — the collect is bounded by the
-    * segment count, control-plane not row-scale) classifies every
-    * segment, then
-    *
-    *   - fully-expired segments are DELETED whole (no read, no rewrite —
-    *     retention cost is O(expired bytes deleted), not O(live log));
-    *   - fully-live segments are untouched (surviving offsets keep their
-    *     files, so point reads and row-group pruning are unchanged);
-    *   - only boundary-straddling segments are rewritten, each to a
-    *     deterministic replacement file (`r-<md5(original)>.parquet`)
-    *     next to the original.
-    *
-    * Crash contract (the standard maintenance-job one, same spirit as
-    * [[compact]]'s swap): whole-file deletes are idempotent; a straddler
-    * is rewritten FIRST (skipped on rerun if its replacement already
-    * exists) and its original deleted AFTER, so no surviving row is ever
-    * lost — a crash between the two steps can duplicate the boundary
-    * rows until `retain` is re-run to completion, which the
-    * deterministic replacement name makes convergent.
-    *
-    * Runs under the publish lock: retention is a writer.
+    * A row with a null event time is never expired by the time policy.
+    * The floors are read under the publish lock, then the rows go
+    * through [[dropRows]], the file-granular pass that also backs
+    * `Cascade.purgeAborted`.
     */
   def retain(spark: SparkSession, topicDir: String,
              minEventTime: Option[java.sql.Timestamp] = None,
              maxEvents: Option[Long] = None): RetentionReport = {
     require(minEventTime.nonEmpty || maxEvents.nonEmpty,
       "retain needs a policy: minEventTime (time) and/or maxEvents (size)")
+    dropRows(spark, topicDir) {
+      // offset floor from the size policy: hwm - maxEvents + 1, per
+      // ordinal sequence (-1 unsharded, else per shard)
+      val floors = maxEvents.fold(Map.empty[Int, Long])(n =>
+        shardHighWaterMarks(spark, topicDir).map { case (sh, hwm) => sh -> (hwm - n + 1L) })
+      val floor = floors.get(-1).map(lit).getOrElse(
+        floors.foldLeft(lit(Long.MinValue)) { case (acc, (sh, f)) =>
+          when(col("shard") === sh, lit(f)).otherwise(acc)
+        })
+      minEventTime.fold(lit(false))(cut => col("ts") < lit(cut)) || col("offset") < floor
+    }
+  }
+
+  /** The one way the log drops rows: every row for which `drop` is TRUE
+    * (null keeps the row) goes, file by file, under the publish lock.
+    * `drop` is evaluated under the lock and may read the `shard` column.
+    *
+    * One column-pruned scan counts each file's rows and dropped rows
+    * (the collect is bounded by the file count, control plane, never
+    * row scale); then
+    *
+    *   - files with no dropped row are untouched (surviving offsets keep
+    *     their files, so point reads and row-group pruning are unchanged);
+    *   - files whose every row is dropped are DELETED whole (no read, no
+    *     rewrite — the cost is O(dropped files), not O(live log));
+    *   - only files holding both are rewritten, each to a deterministic
+    *     replacement `r-<md5(original)>.parquet` next to the original
+    *     (same dir, so shard-directory pruning is kept), staged under
+    *     `_retain-tmp-<md5>`, which Spark's file index never reads.
+    *
+    * The maintenance epoch is bumped once, BEFORE the first change, when
+    * any file will change: a replacement segment is only ever visible to
+    * a stream's listing after the epoch moved. No directory is replaced,
+    * so control files (`_maintenance_epoch`, `_source_epoch`, the held
+    * `_publish.lock`) stay in place.
+    *
+    * Crash contract (Discretized Streams' deterministic recompute): every
+    * step is a whole-file delete, a write under the temp name or a rename
+    * to the deterministic name, so re-running the pass completes it. A
+    * straddler whose replacement is already listed is not rewritten
+    * again: its leftover temp dir and the original are deleted, and its
+    * survivors are counted once, from the replacement. No surviving row
+    * is ever lost, and none is duplicated once a rerun completes.
+    */
+  private[graft] def dropRows(spark: SparkSession, topicDir: String)
+                             (drop: => org.apache.spark.sql.Column): RetentionReport =
     withPublishLock(spark, topicDir) {
-      // merge-aware for the same reason as compact: retention rewrites
       val src     = mergedRead(spark, topicDir)
       val sharded = src.columns.contains("shard")
-      // offset floor from the size policy: hwm - maxEvents + 1, per
-      // ordinal sequence (global, or per shard when sharded)
-      val floors: Map[Option[Int], Long] = maxEvents match {
-        case None => Map.empty
-        case Some(n) => shardHighWaterMarks(spark, topicDir).map { case (sh, hwm) =>
-          (if (sh >= 0) Some(sh) else None) -> (hwm - n + 1L)
-        }
-      }
-      def floorOf(shard: Option[Int]): Long =
-        floors.getOrElse(shard, Long.MinValue)
-      // per-segment stats: ONE column-pruned scan, collect bounded by
-      // the number of files (control plane, never row scale)
-      val stats = src
+      val dropped = coalesce(drop, lit(false))
+      val files = src
         .groupBy(input_file_name().as("file"),
                  (if (sharded) col("shard") else lit(null).cast("int")).as("sh"))
-        .agg(count(lit(1)).as("n"),
-             min(col("offset")).as("minOff"), max(col("offset")).as("maxOff"),
-             min(col("ts")).as("minTs"), max(col("ts")).as("maxTs"))
+        .agg(count(lit(1)).as("n"), count(when(dropped, 1)).as("d"))
         .collect()
+        .map(r => (new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))),
+                   r.get(1), r.getLong(2), r.getLong(3)))
       val (hfs, _) = fs(spark, topicDir)
-      var deleted = 0; var rewritten = 0; var dropped = 0L; var surviving = 0L
-      // classification precedes any action so the maintenance epoch can be
-      // bumped BEFORE the first delete/rewrite: a replacement segment is
-      // only ever visible to a stream's listing after the epoch moved, so
-      // the stream's guard fails the batch that would have redelivered it
-      def expiredTs(t: java.sql.Timestamp): Boolean =
-        minEventTime.exists(cut => t.before(cut))
-      def classify(r: org.apache.spark.sql.Row): (Boolean, Boolean) = {
-        val shard = if (r.isNullAt(1)) None else Some(r.getInt(1))
-        val oMin  = floorOf(shard)
-        val allExpired = // sufficient (not necessary) → misses become straddlers
-          expiredTs(r.getTimestamp(6)) || r.getLong(4) < oMin
-        val noneExpired =
-          !expiredTs(r.getTimestamp(5)) && r.getLong(3) >= oMin
-        (allExpired, noneExpired)
-      }
-      if (stats.exists { r => val (all, none) = classify(r); all || !none })
+      if (files.exists(_._4 > 0))
         writeAtomic(hfs, epochPath(topicDir), (maintenanceEpoch(spark, topicDir) + 1L).toString)
-      stats.foreach { r =>
-        val file  = r.getString(0)
-        val shard = if (r.isNullAt(1)) None else Some(r.getInt(1))
-        val n     = r.getLong(2)
-        val path  = new org.apache.hadoop.fs.Path(new java.net.URI(file))
-        val oMin  = floorOf(shard)
-        val (allExpired, noneExpired) = classify(r)
-        if (allExpired) {
-          hfs.delete(path, false); deleted += 1; dropped += n
-        } else if (noneExpired) {
-          surviving += n
-        } else {
-          // boundary segment: rewrite survivors next to the original
-          // (same dir — preserves shard-directory pruning), then drop it
+      val listed = files.map(_._1).toSet
+      var deleted = 0; var rewritten = 0; var surviving = 0L
+      files.foreach { case (path, sh, n, d) =>
+        if (d == n) { hfs.delete(path, false); deleted += 1 }
+        else if (d == 0) surviving += n
+        else {
           val md5 = java.security.MessageDigest.getInstance("MD5")
             .digest(path.getName.getBytes("UTF-8")).map("%02x".format(_)).mkString
           val repl = new org.apache.hadoop.fs.Path(path.getParent, s"r-$md5.parquet")
-          var kept = 0L
-          val keep = (minEventTime match {
-            case Some(cut) => col("ts") >= lit(cut)
-            case None      => lit(true)
-          }) && col("offset") >= oMin
-          if (!hfs.exists(repl)) {
-            val tmp = new org.apache.hadoop.fs.Path(
-              path.getParent, s"_retain-tmp-$md5")
-            val surv = spark.read.parquet(file).filter(keep)
-              .sortWithinPartitions("offset")
-            surv.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+          val tmp  = new org.apache.hadoop.fs.Path(path.getParent, s"_retain-tmp-$md5")
+          // a listed replacement counts its own rows (and is itself
+          // rewritten if it straddles); the original only goes
+          if (!listed(repl)) {
+            val one = spark.read.parquet(path.toString)
+            val kept =
+              if (sharded) one.withColumn("shard", lit(sh).cast("int")).filter(!dropped).drop("shard")
+              else one.filter(!dropped)
+            kept.sortWithinPartitions("offset").coalesce(1)
+              .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
             val part = hfs.listStatus(tmp)
               .map(_.getPath).find(_.getName.startsWith("part-"))
               .getOrElse(throw new java.io.IOException(
-                s"retain: no part file produced under $tmp"))
+                s"dropRows: no part file produced under $tmp"))
             if (!hfs.rename(part, repl)) throw new java.io.IOException(
-              s"retain: failed to move $part to $repl; original segment untouched")
-            hfs.delete(tmp, true)
+              s"dropRows: failed to move $part to $repl; original segment untouched")
+            surviving += n - d
           }
-          kept = spark.read.parquet(repl.toString).count()
+          hfs.delete(tmp, true)
           hfs.delete(path, false)
-          rewritten += 1; surviving += kept; dropped += n - kept
+          rewritten += 1
         }
       }
-      RetentionReport(deleted, rewritten, dropped, surviving)
+      RetentionReport(deleted, rewritten, files.map(_._4).sum, surviving)
     }
-  }
 
   /** What a mirror pass did: rows ACTUALLY copied this pass (counted from
     * the bounded delta, so a source with offset gaps from compaction/

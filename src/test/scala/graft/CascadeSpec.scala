@@ -175,6 +175,16 @@ class CascadeSpec extends SparkSpec {
     assert(e3.getMessage.contains("does not own"))
   }
 
+  test("membership JSON escapes member ids: a quote in one keeps fencing working") {
+    val c = new Cascade(spark, Files.createTempDirectory("cascade-quote").toString)
+    c.publish("t", Tables.events(spark, sf).limit(10))
+    val (gen, asg) = c.rebalance("g", "t", Seq("m\"1", "m\\2"))
+    assert(asg === Map("m\"1" -> Seq(-1), "m\\2" -> Seq.empty))
+    assert(c.assignment("g", "t") === ((gen, asg)))
+    c.commitOffsetFenced("g", "t", 4, memberId = "m\"1", generation = gen)
+    assert(c.committedOffsets("g", "t") === Map(-1 -> 4L))
+  }
+
   test("rebalance reads the shard set from the directory layout, never the data") {
     val root = Files.createTempDirectory("cascade-layout").toString
     val c    = new Cascade(spark, root)

@@ -7,6 +7,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** A local filesystem under the `crashfs` scheme whose `crashAt`-th
   * create, rename or delete dies the way a process does between two
@@ -48,7 +49,9 @@ object CrashingFs {
 
 /** Control files (group offsets, epoch pins, membership, transaction
   * markers) survive a crash at any step of their replace: a reader sees
-  * the old text or the new, never neither and never a torn tmp. */
+  * the old text or the new, never neither and never a torn tmp; and a
+  * row-dropping pass (`Topic.dropRows`) crashed at any step completes on
+  * its rerun. */
 class ControlFileSpec extends SparkSpec {
 
   test("writeAtomic: a crash at every step leaves the old or the new text; the next write succeeds") {
@@ -109,5 +112,87 @@ class ControlFileSpec extends SparkSpec {
     c.abortTxn("y")
     assert(c.lastStableOffset("t") === Topic.highWaterMark(spark, s"$root/t"))
     assert(c.readCommitted("t").count() === 15)
+  }
+
+  /** Crash `pass` over a fresh copy of `template` at every create, rename
+    * and delete it makes, its Spark writes and the publish lock included;
+    * after each crash, wait out the lock TTL if the lock is left, rerun
+    * the pass and check the log of `topic` holds exactly `want`, with no
+    * temp dir left. */
+  private def crashEveryStep(template: java.io.File, topic: String, want: Seq[Long])
+                            (pass: String => Unit): Unit = {
+    val work = Files.createTempDirectory("control-pass").toFile
+    def fresh(name: String): String = {
+      val d = new java.io.File(work, name)
+      org.apache.commons.io.FileUtils.copyDirectory(template, d)
+      CrashingFs.steps = 0
+      s"crashfs://${d.getAbsolutePath}"
+    }
+    def check(root: String, what: String): Unit = {
+      val local = root.stripPrefix("crashfs://")
+      val offs = spark.read.parquet(s"$local/$topic").select("offset").collect()
+        .map(_.getLong(0)).sorted.toSeq
+      assert(offs === want, what)
+      val temps = scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(local)))(
+        _.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("_retain-tmp-")).toList)
+      assert(temps.isEmpty, s"$what: temp dirs left: $temps")
+    }
+    val clean = fresh("clean")
+    pass(clean)
+    val n = CrashingFs.steps
+    check(clean, "clean pass")
+    assert(n >= 8, s"the pass made $n filesystem steps")
+    info(s"$topic: crashed at each of $n filesystem steps")
+    for (k <- 1 to n) {
+      val root = fresh(s"k$k")
+      CrashingFs.crashAt = k
+      try intercept[Exception](pass(root))
+      finally CrashingFs.crashAt = 0
+      assert(CrashingFs.steps >= k, s"no crash at step $k")
+      if (Files.exists(java.nio.file.Paths.get(root.stripPrefix("crashfs://"), topic, "_publish.lock")))
+        Thread.sleep(LockTtlMs * 2)
+      pass(root)
+      check(root, s"crash at step $k of $n, then a rerun")
+    }
+  }
+
+  private val LockTtlMs = 300L
+
+  test("dropRows: a crash at every step of a purge or a retain pass, then a rerun, keeps exactly the survivors") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashingFs].getName)
+    spark.sparkContext.hadoopConfiguration.setBoolean("fs.crashfs.impl.disable.cache", true)
+    val ev = Tables.events(spark, sf).orderBy("ts", "event_id").limit(60).localCheckpoint(true)
+    val ids = ev.collect().map(_.getAs[Any]("event_id"))
+    def slice(lo: Int, n: Int = 10) = ev.filter(col("event_id").isin(ids.slice(lo, lo + n).toSeq: _*))
+    /** Whether some file of `dir` holds rows on both sides of `split`. */
+    def straddled(dir: String, split: org.apache.spark.sql.Column): Boolean =
+      spark.read.option("mergeSchema", "true").parquet(dir).groupBy(input_file_name())
+        .agg(max(split.cast("int")).as("hi"), min(split.cast("int")).as("lo"))
+        .filter(col("hi") =!= col("lo")).count() > 0
+    spark.conf.set("spark.graft.publishLockTtlMs", LockTtlMs)
+    try {
+      // purge: offsets 10..19 (aborted x) share compacted files with the
+      // live 0..9; 20..29 (aborted y) have their own file; 30..39 are live
+      val purgeRoot = Files.createTempDirectory("control-purge").toFile
+      val c = new Cascade(spark, purgeRoot.getAbsolutePath)
+      c.publish("t", slice(0))
+      c.beginTxn("x"); c.publishTxn("x", "t", slice(10)); c.abortTxn("x")
+      Topic.compact(spark, s"${c.rootDir}/t", keyCol = "offset")
+      c.beginTxn("y"); c.publishTxn("y", "t", slice(20)); c.abortTxn("y")
+      c.publish("t", slice(30))
+      assert(straddled(s"${c.rootDir}/t", col("txn_id") <=> "x"))
+      crashEveryStep(purgeRoot, "t", (0L until 10L) ++ (30L until 40L)) { root =>
+        new Cascade(spark, root).purgeAborted("t")
+      }
+
+      // retain: three 20-row files; keeping the newest 30 deletes the
+      // first, rewrites the second and leaves the third
+      val retainRoot = Files.createTempDirectory("control-retain").toFile
+      Seq(0, 20, 40).foreach(lo => Topic.publish(slice(lo, 20), s"${retainRoot.getAbsolutePath}/t"))
+      assert(straddled(s"${retainRoot.getAbsolutePath}/t", col("offset") < 30))
+      crashEveryStep(retainRoot, "t", 30L until 60L) { root =>
+        Topic.retain(spark, s"$root/t", maxEvents = Some(30L))
+      }
+    } finally spark.conf.unset("spark.graft.publishLockTtlMs")
   }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 
 /** The round-8 maintenance contract, enforced end-to-end:
   *
-  *   - compact/retain bump the topic's maintenance epoch (no-op passes
-  *     don't);
+  *   - compact, retain and purgeAborted bump the topic's maintenance
+  *     epoch (no-op passes don't), and a purge keeps the topic's control
+  *     files;
   *   - a LIVE [[Topic.readStream]] fails loudly — not silent duplicates —
   *     when maintenance rewrites segments under it;
   *   - with a checkpoint-pinned epoch, a stream RESTARTED across a
@@ -40,22 +41,58 @@ class MaintenanceEpochSpec extends SparkSpec {
     val rep = Topic.retain(spark, topic, maxEvents = Some(10L))
     assert(rep.rowsDropped > 0)
     assert(Topic.maintenanceEpoch(spark, topic) === 2L)
+
+    // purgeAborted drops rows through the same pass
+    val c = abortedMix()
+    val (hfs, _) = Topic.fs(spark, c.rootDir)
+    assert(c.purgeAborted("src") === 20L) // compact, then purge
+    assert(Topic.maintenanceEpoch(spark, s"${c.rootDir}/src") === 2L)
+    assert(c.purgeAborted("src") === 0L) // nothing left to drop: no bump
+    assert(Topic.maintenanceEpoch(spark, s"${c.rootDir}/src") === 2L)
+    assert(c.purgeAborted("t") === 20L)
+    assert(Topic.maintenanceEpoch(spark, s"${c.rootDir}/t") === 1L)
+    assert(Topic.readEpoch(hfs, new org.apache.hadoop.fs.Path(s"${c.rootDir}/t/_source_epoch")) ===
+      Some(1L), "the mirror's source pin survives a purge")
   }
 
-  test("compact under a LIVE stream fails the query loudly, not silent dup") {
-    val base = tmpDir()
-    val topic = s"$base/t"
-    Topic.publish(events(100), topic)
+  /** A root whose topic `src` holds 100 live rows and an aborted
+    * transaction's 20, compacted (epoch 1) so that its files mix live and
+    * aborted rows, and whose topic `t` (epoch 0) mirrors those files. */
+  private def abortedMix(): Cascade = {
+    val c = new Cascade(spark, tmpDir())
+    c.publish("src", events(100))
+    c.beginTxn("x")
+    c.publishTxn("x", "src", events(20))
+    c.abortTxn("x")
+    Topic.compact(spark, s"${c.rootDir}/src", keyCol = "offset")
+    Topic.mirror(spark, s"${c.rootDir}/src", s"${c.rootDir}/t")
+    val mixed = spark.read.option("mergeSchema", "true").parquet(s"${c.rootDir}/t")
+      .groupBy(input_file_name())
+      .agg(count(col("txn_id")).as("aborted"), count(lit(1)).as("n"))
+      .filter(col("aborted") > 0 && col("aborted") < col("n"))
+    assert(mixed.count() > 0, "no mirror file mixes live and aborted rows")
+    c
+  }
+
+  // (name, the topic `t` under a root and its row count, the maintenance pass)
+  for ((name, seed, maintain) <- Seq[(String, () => (Cascade, Long), Cascade => Unit)](
+      ("compact", () => {
+        val c = new Cascade(spark, tmpDir()); c.publish("t", events(100)); (c, 100L)
+      }, c => Topic.compact(spark, s"${c.rootDir}/t", keyCol = "user_id")),
+      ("purgeAborted", () => (abortedMix(), 120L), c => c.purgeAborted("t"))))
+  test(s"$name under a LIVE stream fails the query loudly, not silent dup") {
+    val (c, rows) = seed()
+    val topic = s"${c.rootDir}/t"
 
     val q = Topic.readStream(spark, topicDir = topic)
       .writeStream.format("memory").queryName("epoch_live")
-      .option("checkpointLocation", s"$base/ck").start()
+      .option("checkpointLocation", s"${c.rootDir}/ck").start()
     try {
       q.processAllAvailable()
       val before = spark.sql("SELECT count(*) FROM epoch_live").head().getLong(0)
-      assert(before === 100L)
+      assert(before === rows)
 
-      Topic.compact(spark, topic, keyCol = "user_id")
+      maintain(c)
       // the rewritten segments are brand-new files to the source; without
       // the guard they'd land in the sink as duplicates — with it the very
       // batch that would deliver them dies with the epoch message
@@ -64,7 +101,7 @@ class MaintenanceEpochSpec extends SparkSpec {
         Option(t).toSeq.flatMap(e => e.getMessage +: chain(e.getCause))
       assert(chain(err).exists(m => m != null && m.contains("underwent maintenance")),
         s"wrong failure: ${chain(err).mkString(" | ")}")
-      // nothing redelivered: the sink still holds exactly the pre-compact rows
+      // nothing redelivered: the sink still holds exactly the pre-maintenance rows
       assert(spark.sql("SELECT count(*) FROM epoch_live").head().getLong(0) === before)
     } finally {
       if (q.isActive) q.stop()

@@ -48,4 +48,14 @@ class SessionSpec extends SparkSpec {
       .filter(f => hits(root.resolve(f), "listFiles(").nonEmpty)
     assert(recursive.isEmpty, s"listFiles( in $recursive")
   }
+
+  test("Cascade.scala deletes through hfs.delete( only in dropTopic") {
+    val lines = Files.readAllLines(root.resolve("graft/Cascade.scala")).asScala
+    val start = lines.indexWhere(_.contains("def dropTopic("))
+    val end = lines.indexWhere(_.startsWith("  }"), start)
+    assert(start >= 0 && end > start, "Cascade.dropTopic not found")
+    val deletes = lines.indices.filter(i => lines(i).contains("hfs.delete("))
+    assert(deletes.nonEmpty && deletes.forall(i => i > start && i < end),
+      s"hfs.delete( outside dropTopic at lines ${deletes.map(_ + 1)}")
+  }
 }

@@ -360,6 +360,34 @@ class TopicSpec extends SparkSpec {
     assert(spark.read.parquet(dir).agg(max(col("offset"))).head().getLong(0) === 64L)
   }
 
+  test("retain (time): a null event time survives in straddling and untouched files") {
+    val dir  = tmpDir()
+    val ev   = Tables.events(spark, sf).orderBy("ts", "event_id").limit(60).localCheckpoint(true)
+    val rows = ev.collect()
+    val cut  = rows(20).getAs[java.sql.Timestamp]("ts")
+    val nulled = Set(rows(10), rows(45)).map(_.getAs[Any]("event_id"))
+    def batch(lo: Int) = ev.filter(col("event_id").isin(rows.slice(lo, lo + 30)
+      .map(_.getAs[Any]("event_id")): _*))
+      .withColumn("ts", when(!col("event_id").isin(nulled.toSeq: _*), col("ts")))
+    Topic.publish(batch(0), dir)  // straddles the cut, null at rank 10
+    Topic.publish(batch(30), dir) // all at or after the cut, null at rank 45
+    val files = spark.read.parquet(dir).groupBy(input_file_name().as("f"))
+      .agg(min(col("ts")).as("lo")).collect()
+    val untouched = files.filter(r => !r.getTimestamp(1).before(cut)).map(_.getString(0)).toSet
+    assert(untouched.nonEmpty)
+
+    val rep = Topic.retain(spark, dir, minEventTime = Some(cut))
+    assert(rep.filesRewritten >= 1)
+    val log = spark.read.parquet(dir)
+    assert(log.filter(col("ts").isNull).count() === 2, "a null event time is not before the cut")
+    val want = rows.filter(r => nulled(r.getAs[Any]("event_id")) ||
+      !r.getAs[java.sql.Timestamp]("ts").before(cut)).map(_.getAs[Any]("event_id")).toSet
+    assert(log.select("event_id").collect().map(_.get(0)).toSet === want)
+    assert(untouched.subsetOf(log.select(input_file_name()).distinct().collect().map(_.getString(0)).toSet))
+    assert(Topic.retain(spark, dir, minEventTime = Some(cut)) ===
+      Topic.RetentionReport(0, 0, 0L, want.size.toLong))
+  }
+
   test("resident reader serves the same point and batch reads as consume") {
     val dir = java.nio.file.Files.createTempDirectory("topic-reader").toString + "/t"
     Topic.publish(Tables.events(spark, sf).limit(200), dir)

@@ -66,6 +66,16 @@ class TxnSpec extends SparkSpec {
     assert(c.readCommitted("out").count() === 10)
   }
 
+  test("staged txn offsets escape group and topic names: a backslash commits and recovers") {
+    val c = new Cascade(spark, freshRoot())
+    c.publish("t", ev(0, 10))
+    c.beginTxn("esc")
+    c.commitOffsetTxn("esc", "g\\x", "t", 7L)
+    c.commitTxn("esc")
+    assert(c.committedOffsets("g\\x", "t") === Map(-1 -> 7L))
+    assert(c.recoverTxns(ttlMs = 1L) === ((Seq.empty, Seq.empty)))
+  }
+
   test("recovery: stale open txns abort; committed-but-unapplied offsets re-drive") {
     val c = new Cascade(spark, freshRoot())
     c.publish("t", ev(0, 5))
