@@ -134,8 +134,9 @@ object Topic {
     readText(hfs, p).map(_.trim.toLong)
 
   /** Maintenance generation of a topic: 0 until the first destructive
-    * pass, bumped by every [[compact]] and every [[dropRows]] pass that
-    * drops rows ([[retain]], `Cascade.purgeAborted`). */
+    * pass, bumped once by every [[dropRows]] pass that drops rows:
+    * [[compact]] (twice when it also drops tombstones), [[retain]] and
+    * `Cascade.purgeAborted`. A pass that drops nothing leaves it. */
   def maintenanceEpoch(spark: SparkSession, topicDir: String): Long = {
     val (hfs, _) = fs(spark, topicDir)
     readEpoch(hfs, epochPath(topicDir)).getOrElse(0L)
@@ -172,8 +173,9 @@ object Topic {
 
   /** Spark's file-index filter for one path component
     * (`HadoopFSUtils.shouldFilterOutPathName`, minus the `_metadata`
-    * summary files, which are never data): `_temporary/`,
-    * `_retain-tmp-*`, markers and `.crc` files are not read. */
+    * summary files, which are never data): `_temporary/`, the
+    * `_retain-tmp-staging` dir [[dropRows]] stages rewrites in, markers
+    * and `.crc` files are not read. */
   private[graft] def hiddenName(name: String): Boolean =
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")
@@ -484,7 +486,7 @@ object Topic {
     * as (count, max mtime, total bytes): one `listStatus` walk per read,
     * the footer-merge job only when the log actually changed, including
     * changes made by OTHER processes, which a publish-invalidated cache
-    * would miss. Files Spark skips (`_temporary/`, `_retain-tmp-*`,
+    * would miss. Files Spark skips (`_temporary/`, `_retain-tmp-staging`,
     * markers) do not move the fingerprint. At 100 TB the same role is
     * played by a schema sidecar or catalog entry; the fingerprint cache
     * is the offline-exact form.
@@ -780,9 +782,15 @@ object Topic {
 
   /** Log compaction — the Kafka feature the reference lacks entirely
     * (SURVEY.md §1.2: "no keys/compaction"): keep only the LATEST event
-    * per key (by offset), rewriting the topic in place. One window over
-    * the key partitioning; at scale this is the periodic compaction job,
-    * not a per-read path.
+    * per key (by `orderCol`, ties broken by file), per (key, shard) on a
+    * `publishPartitioned` topic, where offsets are dense per shard —
+    * Kafka's model, each partition compacts independently. A predicate
+    * over [[dropRows]]: the topic is cleaned IN PLACE, file by file, as
+    * Kafka's log cleaner cleans segments. Files holding no superseded row
+    * keep their names, and the maintenance epoch is bumped only when a
+    * row drops. A crashed compact leaves every winner in the log, but a
+    * superseded row may still be visible beside it until the next pass
+    * completes.
     *
     * TOMBSTONES (Kafka's delete-record semantics): pass `tombstoneCol`
     * naming a boolean column; a published row with it true is a delete
@@ -794,7 +802,10 @@ object Topic {
     *     in any downstream cache built before this compaction);
     *   - `dropTombstones = true` is the post-retention pass
     *     (delete.retention.ms elapsed): a key whose winner is a
-    *     tombstone vanishes entirely.
+    *     tombstone vanishes entirely. It runs as a second pass that
+    *     drops a tombstone only when it is the last row of its key, so
+    *     neither a crash nor a publish between the passes can leave a
+    *     deleted key's older value without its tombstone.
     *
     * A tombstone only wins by the SAME ordering as any other record —
     * a late value published after the tombstone revives the key,
@@ -803,62 +814,21 @@ object Topic {
   def compact(spark: SparkSession, topicDir: String, keyCol: String,
               orderCol: String = "offset",
               tombstoneCol: Option[String] = None,
-              dropTombstones: Boolean = false): Unit = withPublishLock(spark, topicDir) {
-    // merge-aware: compacting a schema-widened topic must carry the new
-    // column into the rewritten log, not silently drop it
-    val src = mergedRead(spark, topicDir)
-    require(src.columns.contains(orderCol),
-      s"compact needs ordering column '$orderCol' — raw stream sinks " +
-        "(publishStream) carry no offsets; compact those by event_id")
-    // sharded topics (publishPartitioned): offsets are dense PER SHARD,
-    // so a cross-shard orderBy(offset) ties arbitrarily — compaction is
-    // per (key, shard), exactly Kafka's model (each partition compacts
-    // independently), and the rewrite preserves the shard directory
-    // layout so consumeShard keeps pruning
-    val sharded = src.columns.contains("shard")
-    val w =
-      if (sharded) Window.partitionBy(col(keyCol), col("shard")).orderBy(col(orderCol).desc)
-      else Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
-    tombstoneCol.foreach(t => require(src.columns.contains(t),
-      s"compact: tombstone column '$t' not present in topic $topicDir"))
-    val winners = src
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-    val compacted = (tombstoneCol match {
-      case Some(t) if dropTombstones => winners.filter(!coalesce(col(t), lit(false)))
-      case _ => winners
-    }).sortWithinPartitions(orderCol)
-    val tmp = topicDir + ".compact.tmp"
-    val writer = compacted.write.mode(SaveMode.Overwrite)
-    (if (sharded) writer.partitionBy("shard") else writer).parquet(tmp)
-    // crash-safe swap: move the live dir ASIDE first, then the compacted
-    // one into place, then drop the old — at every step a full copy of
-    // the log exists on disk (at the canonical path, at .compact.old, or
-    // at .compact.tmp), and the old copy is deleted only after the new
-    // one is VERIFIED in place (Hadoop rename reports failure via its
-    // return value, not an exception — ignoring it could delete the only
-    // surviving copy). Like publish, compact requires exclusive access.
-    val (hfs, p) = fs(spark, topicDir)
-    // the swap replaces the whole directory, so the bumped maintenance
-    // epoch is written INTO the replacement before the swap — any stream
-    // whose listing sees the compacted files necessarily sees the new
-    // epoch — and a mirror's _source_epoch pin is carried across
-    writeAtomic(hfs, new org.apache.hadoop.fs.Path(tmp, "_maintenance_epoch"),
-                (maintenanceEpoch(spark, topicDir) + 1L).toString)
-    readEpoch(hfs, new org.apache.hadoop.fs.Path(topicDir, "_source_epoch")).foreach(e =>
-      writeAtomic(hfs, new org.apache.hadoop.fs.Path(tmp, "_source_epoch"), e.toString))
-    val old = new org.apache.hadoop.fs.Path(topicDir + ".compact.old")
-    hfs.delete(old, true) // clear any previous failed swap's leftovers
-    if (!hfs.rename(p, old))
-      throw new java.io.IOException(
-        s"compact: failed to move $topicDir aside; topic left untouched")
-    if (!hfs.rename(new org.apache.hadoop.fs.Path(tmp), p)) {
-      hfs.rename(old, p) // restore; old data was never touched
-      throw new java.io.IOException(
-        s"compact: failed to move compacted data into $topicDir; original restored")
+              dropTombstones: Boolean = false): Unit = {
+    // both passes build their predicate under the lock, per (key[, shard])
+    def byKey = {
+      val cols = mergedSchema(spark, topicDir).fold(Set.empty[String])(_.fieldNames.toSet)
+      require(cols(orderCol),
+        s"compact needs ordering column '$orderCol' — a dir written without " +
+          "offsets compacts by another column, such as event_id")
+      tombstoneCol.foreach(t => require(cols(t),
+        s"compact: tombstone column '$t' not present in topic $topicDir"))
+      Window.partitionBy((col(keyCol) +: (if (cols("shard")) Seq(col("shard")) else Nil)): _*)
     }
-    hfs.delete(old, true)
+    dropRows(spark, topicDir)(
+      row_number().over(byKey.orderBy(col(orderCol).desc, col(FileCol).desc)) > 1)
+    tombstoneCol.filter(_ => dropTombstones).foreach(t =>
+      dropRows(spark, topicDir)(col(t) && count(lit(1)).over(byKey) === 1))
   }
 
   /** What a row-dropping pass did: how many whole segment files were
@@ -903,9 +873,34 @@ object Topic {
     }
   }
 
+  /** The column [[dropRows]] tags each row with its file's path, which
+    * a `drop` predicate may read (compact breaks ties by it). */
+  private val FileCol = "_graft_file"
+
+  /** The one dir a [[dropRows]] pass stages rewritten files in, under the
+    * topic dir; Spark's file index never reads it. */
+  private val StagingDir = "_retain-tmp-staging"
+
+  /** The deterministic name a file rewritten by [[dropRows]] takes next
+    * to the original: `part-r-<md5 of its path under the topic
+    * dir>.parquet` (part-file names repeat across `shard=` dirs), which
+    * keeps Spark's `part-` prefix for data files. */
+  private def replacement(top: org.apache.hadoop.fs.Path,
+                          file: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
+    val rel = file.toUri.getPath.stripPrefix(top.toUri.getPath).stripPrefix("/")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(rel.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    new org.apache.hadoop.fs.Path(file.getParent, s"part-r-$md5.parquet")
+  }
+
   /** The one way the log drops rows: every row for which `drop` is TRUE
     * (null keeps the row) goes, file by file, under the publish lock.
-    * `drop` is evaluated under the lock and may read the `shard` column.
+    * `drop` is one column over the whole log, built under the lock, with
+    * each row's file path in [[FileCol]] (from `_metadata.file_path`, so
+    * a row-local predicate's rewrite reads only the files it rewrites).
+    * It may read the `shard` column and may be a window (compact's is),
+    * but must be deterministic: the count and the rewrite each evaluate
+    * it.
     *
     * One column-pruned scan counts each file's rows and dropped rows
     * (the collect is bounded by the file count, control plane, never
@@ -913,76 +908,79 @@ object Topic {
     *
     *   - files with no dropped row are untouched (surviving offsets keep
     *     their files, so point reads and row-group pruning are unchanged);
-    *   - files whose every row is dropped are DELETED whole (no read, no
-    *     rewrite — the cost is O(dropped files), not O(live log));
-    *   - only files holding both are rewritten, each to a deterministic
-    *     replacement `r-<md5(original)>.parquet` next to the original
-    *     (same dir, so shard-directory pruning is kept), staged under
-    *     `_retain-tmp-<md5>`, which Spark's file index never reads.
+    *   - files whose every row is dropped are DELETED whole (no rewrite);
+    *   - only files holding both are rewritten, all in one job that
+    *     writes each one's kept rows, in offset order, under
+    *     [[StagingDir]]; each output is then renamed to its
+    *     [[replacement]] next to the original (same dir, so
+    *     shard-directory pruning is kept), and the originals go last.
     *
     * The maintenance epoch is bumped once, BEFORE the first change, when
-    * any file will change: a replacement segment is only ever visible to
-    * a stream's listing after the epoch moved. No directory is replaced,
+    * any row drops: a replacement segment is only ever visible to a
+    * stream's listing after the epoch moved. No directory is replaced,
     * so control files (`_maintenance_epoch`, `_source_epoch`, the held
     * `_publish.lock`) stay in place.
     *
+    * A streaming file sink's dir (`publishStream`) is refused: Spark
+    * reads it through its `_spark_metadata` log, not its listing.
+    *
     * Crash contract (Discretized Streams' deterministic recompute): every
-    * step is a whole-file delete, a write under the temp name or a rename
-    * to the deterministic name, so re-running the pass completes it. A
-    * straddler whose replacement is already listed is not rewritten
-    * again: its leftover temp dir and the original are deleted, and its
-    * survivors are counted once, from the replacement. No surviving row
-    * is ever lost, and none is duplicated once a rerun completes.
+    * step is a whole-file delete, a write under the staging dir or a
+    * rename to the deterministic name, so re-running the pass completes
+    * it. A pass first finishes a crashed one: it deletes the leftover
+    * staging dir and every original whose replacement is already listed,
+    * before it reads anything. No kept row is ever lost, and none is
+    * duplicated once a rerun completes.
     */
   private[graft] def dropRows(spark: SparkSession, topicDir: String)
                              (drop: => org.apache.spark.sql.Column): RetentionReport =
     withPublishLock(spark, topicDir) {
-      val src     = mergedRead(spark, topicDir)
-      val sharded = src.columns.contains("shard")
-      val dropped = coalesce(drop, lit(false))
-      val files = src
-        .groupBy(input_file_name().as("file"),
-                 (if (sharded) col("shard") else lit(null).cast("int")).as("sh"))
-        .agg(count(lit(1)).as("n"), count(when(dropped, 1)).as("d"))
+      val (hfs, p) = fs(spark, topicDir)
+      require(!hfs.exists(new org.apache.hadoop.fs.Path(p, "_spark_metadata")),
+        s"$topicDir is a streaming file sink: readers list it from its _spark_metadata " +
+          "log, which dropping rows in place cannot update")
+      val top = hfs.makeQualified(p)
+      val staging = new org.apache.hadoop.fs.Path(top, StagingDir)
+      hfs.delete(staging, true)
+      val listed = dataFiles(hfs, p).map(_._1.getPath)
+      val names = listed.toSet
+      listed.filter(f => names(replacement(top, f))).foreach(hfs.delete(_, false))
+
+      val src = mergedRead(spark, topicDir)
+      val marked = src.withColumn(FileCol, col("_metadata.file_path"))
+        .withColumn("_graft_drop", coalesce(drop, lit(false)))
+      val files = marked.groupBy(FileCol)
+        .agg(count(lit(1)), count(when(col("_graft_drop"), 1)))
         .collect()
-        .map(r => (new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))),
-                   r.get(1), r.getLong(2), r.getLong(3)))
-      val (hfs, _) = fs(spark, topicDir)
-      if (files.exists(_._4 > 0))
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      def path(f: String) = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+      if (files.exists(_._3 > 0))
         writeAtomic(hfs, epochPath(topicDir), (maintenanceEpoch(spark, topicDir) + 1L).toString)
-      val listed = files.map(_._1).toSet
-      var deleted = 0; var rewritten = 0; var surviving = 0L
-      files.foreach { case (path, sh, n, d) =>
-        if (d == n) { hfs.delete(path, false); deleted += 1 }
-        else if (d == 0) surviving += n
-        else {
-          val md5 = java.security.MessageDigest.getInstance("MD5")
-            .digest(path.getName.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          val repl = new org.apache.hadoop.fs.Path(path.getParent, s"r-$md5.parquet")
-          val tmp  = new org.apache.hadoop.fs.Path(path.getParent, s"_retain-tmp-$md5")
-          // a listed replacement counts its own rows (and is itself
-          // rewritten if it straddles); the original only goes
-          if (!listed(repl)) {
-            val one = spark.read.parquet(path.toString)
-            val kept =
-              if (sharded) one.withColumn("shard", lit(sh).cast("int")).filter(!dropped).drop("shard")
-              else one.filter(!dropped)
-            kept.sortWithinPartitions("offset").coalesce(1)
-              .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-            val part = hfs.listStatus(tmp)
-              .map(_.getPath).find(_.getName.startsWith("part-"))
-              .getOrElse(throw new java.io.IOException(
-                s"dropRows: no part file produced under $tmp"))
-            if (!hfs.rename(part, repl)) throw new java.io.IOException(
-              s"dropRows: failed to move $part to $repl; original segment untouched")
-            surviving += n - d
-          }
-          hfs.delete(tmp, true)
-          hfs.delete(path, false)
-          rewritten += 1
-        }
+      // every straddler's kept rows in one job, one output dir each
+      val straddlers = files.collect {
+        case (f, n, d) if d > 0 && d < n => f -> replacement(top, path(f))
+      }.toMap
+      if (straddlers.nonEmpty) {
+        val sort = col("_graft_out") +: (if (src.columns.contains("offset")) Seq(col("offset")) else Nil)
+        marked.filter(!col("_graft_drop"))
+          .withColumn("_graft_out",
+            element_at(typedLit(straddlers.map { case (f, r) => f -> r.getName }), col(FileCol)))
+          .filter(col("_graft_out").isNotNull)
+          .repartition(col("_graft_out")).sortWithinPartitions(sort: _*)
+          .select((src.columns.filterNot(_ == "shard") :+ "_graft_out").map(col): _*)
+          .write.partitionBy("_graft_out").parquet(staging.toString)
       }
-      RetentionReport(deleted, rewritten, files.map(_._4).sum, surviving)
+      straddlers.valuesIterator.foreach { repl =>
+        val out = new org.apache.hadoop.fs.Path(staging, s"_graft_out=${repl.getName}")
+        val part = hfs.listStatus(out).map(_.getPath).find(_.getName.startsWith("part-"))
+          .getOrElse(throw new java.io.IOException(s"dropRows: no part file produced under $out"))
+        if (!hfs.rename(part, repl)) throw new java.io.IOException(
+          s"dropRows: failed to move $part to $repl; original segment untouched")
+      }
+      files.foreach { case (f, _, d) => if (d > 0) hfs.delete(path(f), false) }
+      hfs.delete(staging, true)
+      RetentionReport(files.count(f => f._3 == f._2), straddlers.size,
+                      files.map(_._3).sum, files.map(f => f._2 - f._3).sum)
     }
 
   /** What a mirror pass did: rows ACTUALLY copied this pass (counted from

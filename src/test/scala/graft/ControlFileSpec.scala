@@ -116,10 +116,11 @@ class ControlFileSpec extends SparkSpec {
 
   /** Crash `pass` over a fresh copy of `template` at every create, rename
     * and delete it makes, its Spark writes and the publish lock included;
-    * after each crash, wait out the lock TTL if the lock is left, rerun
-    * the pass and check the log of `topic` holds exactly `want`, with no
-    * temp dir left. */
-  private def crashEveryStep(template: java.io.File, topic: String, want: Seq[Long])
+    * after each crash, run `afterCrash` on the local topic dir, wait out
+    * the lock TTL if the lock is left, rerun the pass and check the log of
+    * `topic` holds exactly `want`, with no temp dir left. */
+  private def crashEveryStep(template: java.io.File, topic: String, want: Seq[Long],
+                             afterCrash: String => Unit = _ => ())
                             (pass: String => Unit): Unit = {
     val work = Files.createTempDirectory("control-pass").toFile
     def fresh(name: String): String = {
@@ -149,6 +150,7 @@ class ControlFileSpec extends SparkSpec {
       try intercept[Exception](pass(root))
       finally CrashingFs.crashAt = 0
       assert(CrashingFs.steps >= k, s"no crash at step $k")
+      afterCrash(s"${root.stripPrefix("crashfs://")}/$topic")
       if (Files.exists(java.nio.file.Paths.get(root.stripPrefix("crashfs://"), topic, "_publish.lock")))
         Thread.sleep(LockTtlMs * 2)
       pass(root)
@@ -171,13 +173,15 @@ class ControlFileSpec extends SparkSpec {
         .filter(col("hi") =!= col("lo")).count() > 0
     spark.conf.set("spark.graft.publishLockTtlMs", LockTtlMs)
     try {
-      // purge: offsets 10..19 (aborted x) share compacted files with the
-      // live 0..9; 20..29 (aborted y) have their own file; 30..39 are live
+      // purge: offsets 10..19 (aborted x) share one published frame's
+      // file with the live 0..9; 20..29 (aborted y) have their own file;
+      // 30..39 are live
       val purgeRoot = Files.createTempDirectory("control-purge").toFile
       val c = new Cascade(spark, purgeRoot.getAbsolutePath)
-      c.publish("t", slice(0))
-      c.beginTxn("x"); c.publishTxn("x", "t", slice(10)); c.abortTxn("x")
-      Topic.compact(spark, s"${c.rootDir}/t", keyCol = "offset")
+      c.beginTxn("x")
+      c.publish("t", slice(0, 20).withColumn("txn_id",
+        when(col("event_id").isin(ids.slice(10, 20).toSeq: _*), lit("x"))))
+      c.abortTxn("x")
       c.beginTxn("y"); c.publishTxn("y", "t", slice(20)); c.abortTxn("y")
       c.publish("t", slice(30))
       assert(straddled(s"${c.rootDir}/t", col("txn_id") <=> "x"))
@@ -192,6 +196,49 @@ class ControlFileSpec extends SparkSpec {
       assert(straddled(s"${retainRoot.getAbsolutePath}/t", col("offset") < 30))
       crashEveryStep(retainRoot, "t", 30L until 60L) { root =>
         Topic.retain(spark, s"$root/t", maxEvents = Some(30L))
+      }
+    } finally spark.conf.unset("spark.graft.publishLockTtlMs")
+  }
+
+  test("compact: a crash at every step, then a rerun, equals the one-shot compact") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.crashfs.impl", classOf[CrashingFs].getName)
+    spark.sparkContext.hadoopConfiguration.setBoolean("fs.crashfs.impl.disable.cache", true)
+    /** One batch of (event_id, user_id, tombstone) rows, in id order. */
+    def batch(rows: (Long, Long, Boolean)*) = rows.map { case (id, user, tomb) =>
+      (id, new java.sql.Timestamp(1767225600000L + id * 1000L), user,
+       if (tomb) "del" else "set", id * 1.0, tomb)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "deleted")
+    // users 0..8 over six files; the first compact leaves epoch 1. The
+    // second drops the first file's every row but u8's (a rewrite), the
+    // fourth file whole, and u0 from the second file (a rewrite); the
+    // fifth holds u4's and u5's winning tombstones
+    val root = Files.createTempDirectory("control-compact").toFile
+    val topic = s"${root.getAbsolutePath}/t"
+    Topic.publish(batch((0L to 8L).map(i => (i, i, false)): _*), topic)
+    Topic.publish(batch((9L, 0L, false), (10L, 1L, false)), topic)
+    Topic.compact(spark, topic, keyCol = "user_id")
+    assert(Topic.maintenanceEpoch(spark, topic) === 1L)
+    Topic.publish(batch((11L, 2L, false), (12L, 3L, false)), topic)
+    Topic.publish(batch((13L, 6L, false)), topic)
+    Topic.publish(batch((14L, 4L, true), (15L, 5L, true), (16L, 0L, false), (17L, 6L, false)), topic)
+    Topic.publish(batch((18L, 7L, false)), topic)
+    val log = spark.read.parquet(topic).select("user_id", "offset", "deleted").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    val winners = log.groupBy(_._1).values.map(_.maxBy(_._2)).toSeq
+    val hfs = CrashingFs.fileSystem() // unchecksummed, like the writes under test
+    spark.conf.set("spark.graft.publishLockTtlMs", LockTtlMs)
+    try for (dropTombstones <- Seq(false, true)) {
+      val want = winners.filterNot(w => dropTombstones && w._3).map(_._2).sorted
+      assert(want.size === (if (dropTombstones) 7 else 9))
+      crashEveryStep(root, "t", want, afterCrash = dir => {
+        assert(Topic.readEpoch(hfs, new Path(s"crashfs://$dir/_maintenance_epoch")).exists(_ >= 1L),
+          s"$dir lost its maintenance epoch")
+        val offs = spark.read.parquet(dir).select("offset").collect().map(_.getLong(0)).toSet
+        assert(want.toSet.subsetOf(offs), s"$dir lost a winner: ${want.filterNot(offs)}")
+      }) { r =>
+        Topic.compact(spark, s"$r/t", keyCol = "user_id", tombstoneCol = Some("deleted"),
+                      dropTombstones = dropTombstones)
       }
     } finally spark.conf.unset("spark.graft.publishLockTtlMs")
   }

@@ -56,15 +56,19 @@ class MaintenanceEpochSpec extends SparkSpec {
   }
 
   /** A root whose topic `src` holds 100 live rows and an aborted
-    * transaction's 20, compacted (epoch 1) so that its files mix live and
-    * aborted rows, and whose topic `t` (epoch 0) mirrors those files. */
+    * transaction's 20, published as one frame so that its files mix live
+    * and aborted rows, then compacted (epoch 1) over one re-published live
+    * event; and whose topic `t` (epoch 0) mirrors those files. */
   private def abortedMix(): Cascade = {
     val c = new Cascade(spark, tmpDir())
-    c.publish("src", events(100))
+    val ev = events(120)
+    val ids = ev.select("event_id").collect().map(_.get(0))
+    val aborted = ids.indices.filter(_ % 6 == 0).map(ids)
     c.beginTxn("x")
-    c.publishTxn("x", "src", events(20))
+    c.publish("src", ev.withColumn("txn_id", when(col("event_id").isin(aborted: _*), lit("x"))))
     c.abortTxn("x")
-    Topic.compact(spark, s"${c.rootDir}/src", keyCol = "offset")
+    c.publish("src", ev.filter(col("event_id") === ids(1)))
+    Topic.compact(spark, s"${c.rootDir}/src", keyCol = "event_id")
     Topic.mirror(spark, s"${c.rootDir}/src", s"${c.rootDir}/t")
     val mixed = spark.read.option("mergeSchema", "true").parquet(s"${c.rootDir}/t")
       .groupBy(input_file_name())

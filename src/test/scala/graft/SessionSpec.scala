@@ -58,4 +58,14 @@ class SessionSpec extends SparkSpec {
     assert(deletes.nonEmpty && deletes.forall(i => i > start && i < end),
       s"hfs.delete( outside dropTopic at lines ${deletes.map(_ + 1)}")
   }
+
+  test("src/main builds no sibling path of a topic directory") {
+    val siblings = mainSources().flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("Dir + \".") || l.contains("Dir + \"-") =>
+          s"${root.relativize(p)}:${i + 1}"
+      }
+    }
+    assert(siblings.isEmpty, s"a path beside a topic dir is built at $siblings")
+  }
 }

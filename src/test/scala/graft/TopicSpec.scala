@@ -279,6 +279,70 @@ class TopicSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() > 0)
   }
 
+  /** Every file under `dir`, by its path under `dir`, with its mtime. */
+  private def filesOf(dir: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val top = java.nio.file.Paths.get(dir)
+    scala.util.Using.resource(Files.walk(top))(_.iterator().asScala
+      .filter(Files.isRegularFile(_))
+      .map(f => top.relativize(f).toString -> Files.getLastModifiedTime(f).toMillis).toMap)
+  }
+
+  test("a compact that supersedes nothing keeps the epoch and every file") {
+    val dir = tmpDir()
+    Topic.publish(Tables.events(spark, sf).limit(100), dir)
+    Topic.publish(Tables.events(spark, sf).limit(50), dir)
+    val before = filesOf(dir)
+    Topic.compact(spark, dir, keyCol = "offset")
+    assert(Topic.maintenanceEpoch(spark, dir) === 0L)
+    assert(filesOf(dir) === before)
+  }
+
+  test("compact keeps the name of a file with no superseded row") {
+    val dir = tmpDir()
+    val ev = Tables.events(spark, sf).dropDuplicates("event_id").limit(200).localCheckpoint(true)
+    Topic.publish(ev, dir)
+    val first = filesOf(dir).keySet
+    Topic.publish(ev.limit(20), dir)
+    val second = filesOf(dir).keySet -- first
+    assert(second.exists(_.endsWith(".parquet")))
+    Topic.compact(spark, dir, keyCol = "event_id")
+    assert(second.subsetOf(filesOf(dir).keySet), "a file of winners was rewritten")
+    assert(spark.read.parquet(dir).count() === 200)
+    assert(Topic.maintenanceEpoch(spark, dir) === 1L)
+  }
+
+  test("compact of an offset-less parquet dir by event_id keeps the max event_id per key") {
+    val dir = tmpDir()
+    val ev = Tables.events(spark, sf).limit(300).localCheckpoint(true)
+    ev.write.parquet(dir)
+    val first = filesOf(dir).keySet
+    // a later write of one winner for each of ten users
+    ev.dropDuplicates("user_id").limit(10).withColumn("event_id", col("event_id") + 1000000L)
+      .write.mode("append").parquet(dir)
+    val later = filesOf(dir).keySet -- first
+    val all = spark.read.parquet(dir)
+    assert(!all.columns.contains("offset"))
+    val expected = all.groupBy("user_id").agg(max("event_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    Topic.compact(spark, dir, "user_id", orderCol = "event_id")
+    val got = spark.read.parquet(dir).select("user_id", "event_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === expected)
+    assert(spark.read.parquet(dir).count() === expected.size)
+    assert(later.subsetOf(filesOf(dir).keySet), "the later file of winners was rewritten")
+  }
+
+  test("compact refuses a streaming file sink, whose readers list its _spark_metadata log") {
+    val dir = tmpDir()
+    Tables.events(spark, sf).limit(20).write.parquet(dir)
+    Files.createDirectory(java.nio.file.Paths.get(dir, "_spark_metadata"))
+    val before = filesOf(dir)
+    val err = intercept[IllegalArgumentException](Topic.compact(spark, dir, "user_id", orderCol = "event_id"))
+    assert(err.getMessage.contains("streaming file sink"))
+    assert(filesOf(dir) === before)
+  }
+
   test("retain (size): expired segments dropped whole, surviving point reads unchanged") {
     val dir = tmpDir()
     val ev  = Tables.events(spark, sf).orderBy("ts", "event_id").limit(100)
