@@ -100,10 +100,8 @@ class TopicCatalog extends TableCatalog {
       "topic schemas evolve through publishes (additive widening); " +
         "ALTER TABLE is not a topic operation")
 
-  override def dropTable(ident: Identifier): Boolean = {
-    val (hfs, p) = graft.Topic.fs(spark, dirFor(ident))
-    hfs.exists(p) && hfs.delete(p, true)
-  }
+  override def dropTable(ident: Identifier): Boolean =
+    tableExists(ident) && { new graft.Cascade(spark, root).dropTopic(ident.name); true }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit =
     throw new UnsupportedOperationException(
