@@ -122,11 +122,9 @@ final class Cascade(spark: SparkSession, root: String) {
     val (hfs, p) = Topic.fs(spark, groupPath(group, topic).toString)
     Topic.readText(hfs, p).fold(Map.empty[Int, Long]) { txt =>
       JsonMethods.parse(txt) match {
-        case JObject(fields) => fields.map {
-          case (k, JInt(v))  => k.toInt -> v.toLong
-          case (k, JLong(v)) => k.toInt -> v
-          case (k, other) => throw new IllegalStateException(
-            s"corrupt group state for $group/$topic at key $k: $other")
+        case JObject(fields) => fields.map { case (k, v) =>
+          k.toInt -> Cascade.jsonLong(v).getOrElse(throw new IllegalStateException(
+            s"corrupt group state for $group/$topic at key $k: $v"))
         }.toMap
         case other => throw new IllegalStateException(
           s"corrupt group state for $group/$topic: $other")
@@ -137,7 +135,7 @@ final class Cascade(spark: SparkSession, root: String) {
   private def writeOffsets(group: String, topic: String, m: Map[Int, Long]): Unit = {
     val (hfs, p) = Topic.fs(spark, groupPath(group, topic).toString)
     Topic.writeAtomic(hfs, p,
-      m.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+      Cascade.json(m.toSeq.sortBy(_._1).map { case (k, v) => k.toString -> JLong(v) }: _*))
   }
 
   // ---- maintenance epoch × consumer groups ------------------------------
@@ -314,30 +312,20 @@ final class Cascade(spark: SparkSession, root: String) {
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     requireTopic(topic)
     requireGroupEpoch(group, topic)
-    val committed = committedOffsets(group, topic)
     val base = Topic.readStream(spark, dir(topic), maxFilesPerTrigger)
-    if (base.columns.contains("shard")) {
-      val floorCol = committed.filter(_._1 >= 0)
-        .foldLeft(lit(0L)) { case (acc, (sh, n)) =>
-          when(col("shard") === sh, lit(n)).otherwise(acc)
-        }
-      base.filter(col("offset") >= floorCol)
-    } else base.filter(col("offset") >= lit(committed.getOrElse(-1, 0L)))
+    base.filter(col("offset") >= Topic.perSequence(base.schema, committedOffsets(group, topic), 0L))
   }
 
   /** Commit a processed micro-batch's position for the group: next
-    * offset = max offset in the batch + 1, per shard on sharded topics.
-    * Call from `foreachBatch` AFTER the batch's effects are durable.
-    * Cost: one max-aggregate over the (already materialized, bounded)
-    * micro-batch; the collect is shard-count rows. Empty batches no-op. */
+    * offset = max offset in the batch + 1, per ordinal sequence
+    * ([[Topic.sequence]]: per shard on sharded topics). A null shard's
+    * rows are in no sequence and commit nothing. Call from
+    * `foreachBatch` AFTER the batch's effects are durable. Cost: one
+    * max-aggregate over the (already materialized, bounded) micro-batch;
+    * the collect is shard-count rows. Empty batches no-op. */
   def commitBatch(group: String, topic: String, batch: DataFrame): Unit =
-    if (batch.columns.contains("shard")) {
-      batch.groupBy("shard").agg(max(col("offset"))).collect().foreach { r =>
-        if (!r.isNullAt(1)) commitOffset(group, topic, r.getLong(1) + 1L, Some(r.getInt(0)))
-      }
-    } else {
-      val m = batch.agg(max(col("offset"))).head()
-      if (!m.isNullAt(0)) commitOffset(group, topic, m.getLong(0) + 1L)
+    Topic.bySequence(batch, max(col("offset"))).foreach { case (sq, hi) =>
+      commitOffset(group, topic, hi + 1L, Some(sq))
     }
 
   /** The pre-wired group-consumer loop: [[readStreamGroup]] →
@@ -375,11 +363,12 @@ final class Cascade(spark: SparkSession, root: String) {
     }.toDF("shard", "committed_next", "high_water_mark", "lag")
   }
 
-  /** Kafka's `offsetsForTimes`: per shard (-1 = the unsharded sequence),
-    * the EARLIEST offset whose event time is at-or-after `ts` — the
-    * offset a consumer seeks to for "replay from 3pm". Shards whose
-    * entire log predates `ts` are absent from the result (Kafka returns
-    * null for those partitions). One filtered min-aggregate on the log:
+  /** Kafka's `offsetsForTimes`: per ordinal sequence (shard, or -1 =
+    * the unsharded sequence; [[Topic.sequence]]), the EARLIEST offset
+    * whose event time is at-or-after `ts` — the offset a consumer seeks
+    * to for "replay from 3pm". Shards whose entire log predates `ts` are
+    * absent from the result (Kafka returns null for those partitions),
+    * and so are a null shard's rows, which are in no sequence. One filtered min-aggregate on the log:
     * parquet row-group stats prune everything below the cut, and the
     * per-shard min is map-side combined — control-plane cost at any log
     * size. `tsCol` names the event-time column (default `ts`). */
@@ -389,15 +378,7 @@ final class Cascade(spark: SparkSession, root: String) {
     val log = Topic.mergedRead(spark, dir(topic))
     require(log.columns.contains(tsCol),
       s"offsetsForTimes: no '$tsCol' column on $topic (has ${log.columns.mkString(", ")})")
-    val eligible = log.filter(col(tsCol) >= lit(ts))
-    val rows =
-      if (log.columns.contains("shard"))
-        eligible.groupBy("shard").agg(min(col("offset")).as("o")).collect()
-          .map(r => r.getInt(0) -> r.getLong(1))
-      else
-        eligible.agg(min(col("offset")).as("o")).collect()
-          .filterNot(_.isNullAt(0)).map(r => -1 -> r.getLong(0))
-    rows.toMap
+    Topic.bySequence(log.filter(col(tsCol) >= lit(ts)), min(col("offset")))
   }
 
   // ── Membership / rebalance ─────────────────────────────────────────
@@ -419,19 +400,13 @@ final class Cascade(spark: SparkSession, root: String) {
     val (hfs, p) = Topic.fs(spark, membershipPath(group, topic).toString)
     Topic.readText(hfs, p).fold((0L, Map.empty[String, Seq[Int]])) { txt =>
       val j = JsonMethods.parse(txt)
-      val gen = (j \ "generation") match {
-        case JInt(v)  => v.toLong
-        case JLong(v) => v
-        case other => throw new IllegalStateException(
-          s"corrupt membership for $group/$topic: generation=$other")
-      }
+      val gen = Cascade.jsonLong(j \ "generation").getOrElse(throw new IllegalStateException(
+        s"corrupt membership for $group/$topic: generation=${j \ "generation"}"))
       val members = (j \ "members") match {
         case JObject(fields) => fields.map {
-          case (m, JArray(shards)) => m -> shards.map {
-            case JInt(v) => v.toInt
-            case other => throw new IllegalStateException(
-              s"corrupt membership for $group/$topic: shard=$other")
-          }
+          case (m, JArray(shards)) => m -> shards.map(v =>
+            Cascade.jsonLong(v).getOrElse(throw new IllegalStateException(
+              s"corrupt membership for $group/$topic: shard=$v")).toInt)
           case (m, other) => throw new IllegalStateException(
             s"corrupt membership for $group/$topic at member $m: $other")
         }.toMap
@@ -815,11 +790,8 @@ final class Cascade(spark: SparkSession, root: String) {
         case JObject(f) =>
           val m = f.toMap
           def str(k: String) = m(k).asInstanceOf[JString].s
-          def num(k: String) = m(k) match {
-            case JInt(v)  => v.toLong
-            case JLong(v) => v
-            case o => throw new IllegalStateException(s"corrupt txn offsets: $o")
-          }
+          def num(k: String) = Cascade.jsonLong(m(k)).getOrElse(
+            throw new IllegalStateException(s"corrupt txn offsets: ${m(k)}"))
           val sh = num("shard") match { case -1L => None; case v => Some(v.toInt) }
           // seek, not commitOffset: the hwm was validated at staging
           // time and retention may have moved since
@@ -890,6 +862,15 @@ object Cascade {
   /** A one-line JSON object, names and strings escaped by json4s. */
   private def json(fields: (String, JValue)*): String =
     JsonMethods.compact(JObject(fields.toList))
+
+  /** An integer field of a control file (json4s parses one as JInt or
+    * JLong); None when it holds anything else, which the caller reports
+    * as a corrupt file. */
+  private def jsonLong(v: JValue): Option[Long] = v match {
+    case JInt(n)  => Some(n.toLong)
+    case JLong(n) => Some(n)
+    case _        => None
+  }
 
   /** What a guarded retention pass did: the underlying file-granular
     * retention report plus any stale open transactions it TTL-aborted

@@ -261,20 +261,46 @@ object Topic {
     current
   }
 
+  /** The ordinal sequence of a row of a topic with `schema`, the key of
+    * [[offsetBounds]]: its `shard` on a `publishPartitioned` topic (offsets
+    * are dense per shard), the literal -1 on an unsharded one. A null
+    * shard (a null `event_id` hashed by publishPartitioned) belongs to no
+    * sequence: what is keyed by sequence skips it. Alias it to group by
+    * it: a bare literal in `groupBy` reads as a column position. */
+  private[graft] def sequence(schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.Column =
+    if (schema.fieldNames.contains("shard")) col("shard") else lit(-1)
+
+  /** Per row, the value `values` holds for its [[sequence]], else
+    * `default` (a null shard gets `default`). On an unsharded topic the
+    * key is a literal, so Catalyst folds this to a constant and an
+    * `offset` predicate over it still pushes down to parquet. */
+  private[graft] def perSequence(schema: org.apache.spark.sql.types.StructType,
+                                 values: Map[Int, Long], default: Long): org.apache.spark.sql.Column = {
+    val key = sequence(schema)
+    values.foldLeft(lit(default)) { case (acc, (sq, v)) => when(key === sq, lit(v)).otherwise(acc) }
+  }
+
+  /** One integer aggregate of `frame` per ordinal sequence ([[sequence]]);
+    * a null shard, and a sequence whose aggregate is null, are left out.
+    * The collect is one row per sequence. */
+  private[graft] def bySequence(frame: DataFrame, agg: org.apache.spark.sql.Column): Map[Int, Long] =
+    frame.groupBy(sequence(frame.schema).as("seq")).agg(agg).collect()
+      .collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getInt(0) -> r.getLong(1) }.toMap
+
   /** The fallback for footers without `offset` statistics: the column
     * scan, grouped like the footer path. */
   private def scanOffsetBounds(spark: SparkSession, topicDir: String): Map[Int, (Long, Long)] = {
     val log = mergedLog(spark, topicDir).getOrElse(return Map.empty)
     if (!log.columns.contains("offset")) return Map.empty
-    val key = if (log.columns.contains("shard")) col("shard") else lit(-1)
-    log.groupBy(key.as("k")).agg(min(col("offset")), max(col("offset"))).collect()
+    log.groupBy(sequence(log.schema).as("seq")).agg(min(col("offset")), max(col("offset"))).collect()
       .collect { case r if !r.isNullAt(0) && !r.isNullAt(1) =>
         r.getInt(0) -> (r.getLong(1), r.getLong(2))
       }.toMap
   }
 
   /** Per ordinal sequence, the (min, max) `offset` the topic holds: keyed
-    * by shard on a `publishPartitioned` topic, by -1 otherwise; empty for
+    * by shard on a `publishPartitioned` topic, by -1 otherwise (see
+    * [[sequence]]; a null shard's rows are in no sequence); empty for
     * a missing, file-less or zero-row topic, or one without an `offset`
     * column (a raw `publishStream` sink). Exactly what a
     * `groupBy(shard).agg(min, max)` scan returns, but read from parquet
@@ -643,14 +669,11 @@ object Topic {
     checkSchemaCompatible(spark, topicDir, events.schema)
     // per-shard high-water marks so repeated publishes continue each
     // shard's dense ordinal sequence instead of restarting at 0
-    val bases = shardHighWaterMarks(spark, topicDir)
-    val baseCol = bases.foldLeft(lit(-1L)) { case (acc, (sh, hwm)) =>
-      when(col("shard") === sh, lit(hwm)).otherwise(acc)
-    }
     val w = Window.partitionBy(col("shard")).orderBy(col("ts"), col("event_id"))
-    events
-      .withColumn("shard", pmod(col("event_id"), lit(shards)).cast("int"))
-      .withColumn("offset", row_number().over(w) + baseCol)
+    val sharded = events.withColumn("shard", pmod(col("event_id"), lit(shards)).cast("int"))
+    sharded
+      .withColumn("offset",
+        row_number().over(w) + perSequence(sharded.schema, shardHighWaterMarks(spark, topicDir), -1L))
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "offset")
       .write.mode(SaveMode.Append).partitionBy("shard").parquet(topicDir)
@@ -862,13 +885,9 @@ object Topic {
       "retain needs a policy: minEventTime (time) and/or maxEvents (size)")
     dropRows(spark, topicDir) {
       // offset floor from the size policy: hwm - maxEvents + 1, per
-      // ordinal sequence (-1 unsharded, else per shard)
-      val floors = maxEvents.fold(Map.empty[Int, Long])(n =>
-        shardHighWaterMarks(spark, topicDir).map { case (sh, hwm) => sh -> (hwm - n + 1L) })
-      val floor = floors.get(-1).map(lit).getOrElse(
-        floors.foldLeft(lit(Long.MinValue)) { case (acc, (sh, f)) =>
-          when(col("shard") === sh, lit(f)).otherwise(acc)
-        })
+      // ordinal sequence
+      val floor = maxEvents.fold(lit(Long.MinValue))(n => perSequence(mergedRead(spark, topicDir).schema,
+        shardHighWaterMarks(spark, topicDir).map { case (sq, hwm) => sq -> (hwm - n + 1L) }, Long.MinValue))
       minEventTime.fold(lit(false))(cut => col("ts") < lit(cut)) || col("offset") < floor
     }
   }
@@ -1006,14 +1025,17 @@ object Topic {
     * segments), appends under the MIRROR's publish lock, and is
     * idempotent — a crashed pass either committed its files (Spark's
     * output committer is atomic per job) or left nothing, so re-running
-    * converges. Sharded topics (publishPartitioned) mirror per shard
-    * (offsets are dense per shard), preserving the shard directory
-    * layout so `consumeShard` prunes identically on the replica.
+    * converges. One pass serves both layouts: the hwms and the delta are
+    * per ordinal sequence ([[sequence]]: each shard of a
+    * `publishPartitioned` topic, whose offsets are dense per shard, or
+    * the one unsharded sequence), and a sharded delta keeps the shard
+    * directory layout so `consumeShard` prunes identically on the
+    * replica. A null shard's rows are in no sequence and are not copied.
     *
     * The mirror must be written ONLY by this method (the contract every
-    * mirror tool has): a mirror whose hwm is ahead of the source has
-    * diverged and errors loudly rather than silently interleaving two
-    * ordinal sequences.
+    * mirror tool has): a mirror with any sequence's hwm ahead of the
+    * source's has diverged and errors loudly rather than silently
+    * interleaving two ordinal sequences.
     */
   def mirror(spark: SparkSession, sourceDir: String, mirrorDir: String): MirrorReport =
     withPublishLock(spark, mirrorDir) {
@@ -1044,58 +1066,35 @@ object Topic {
         case Some(_) => ()
         case None    => writeAtomic(mfs, srcPinP, srcEpoch.toString)
       }
-      val sharded = src.columns.contains("shard")
-      if (!sharded) {
-        val srcHwm = highWaterMark(spark, sourceDir)
-        val tgtHwm = highWaterMark(spark, mirrorDir)
-        if (tgtHwm > srcHwm) throw new IllegalStateException(
-          s"mirror $mirrorDir has diverged from $sourceDir: mirror hwm $tgtHwm > " +
-            s"source hwm $srcHwm — the mirror was written by something other than mirror()")
-        if (srcHwm == tgtHwm) MirrorReport(0L, srcHwm, tgtHwm)
-        else {
-          // bounded ABOVE by the hwm this pass observed: a publish racing
-          // the pass lands in the NEXT pass, so the report's hwms describe
-          // exactly what the mirror now holds (the write executes lazily —
-          // without the cap it could copy rows beyond the reported hwm)
-          val delta = src.filter(col("offset") > tgtHwm && col("offset") <= srcHwm)
-          checkSchemaCompatible(spark, mirrorDir, delta.schema)
-          // true row count, not srcHwm - tgtHwm: offsets above the mirror
-          // hwm can have gaps when the source was compacted/retained before
-          // the mirror was seeded. One extra pushdown-pruned pass over just
-          // the delta segments — maintenance-path cost.
-          val copied = delta.count()
-          delta.write.mode(SaveMode.Append).parquet(mirrorDir)
-          MirrorReport(copied, srcHwm, srcHwm)
-        }
-      } else {
-        // offsets are dense per shard, so each shard has its own hwm
-        val srcH = shardHighWaterMarks(spark, sourceDir)
-        val tgtH = shardHighWaterMarks(spark, mirrorDir)
-        tgtH.foreach { case (sh, h) =>
-          if (h > srcH.getOrElse(sh, -1L)) throw new IllegalStateException(
-            s"mirror $mirrorDir has diverged from $sourceDir on shard $sh: " +
-              s"mirror hwm $h > source hwm ${srcH.getOrElse(sh, -1L)}")
-        }
-        val floorCol = tgtH.foldLeft(lit(-1L)) { case (acc, (sh, h)) =>
-          when(col("shard") === sh, lit(h)).otherwise(acc)
-        }
-        // per-shard (floor, cap]: capped at the hwms this pass observed so
-        // a racing publish lands in the next pass, and counted for real so
-        // offset gaps (compacted/retained source) don't inflate the report
-        val capCol = srcH.foldLeft(lit(-1L)) { case (acc, (sh, h)) =>
-          when(col("shard") === sh, lit(h)).otherwise(acc)
-        }
-        val delta = src.filter(col("offset") > floorCol && col("offset") <= capCol)
-        val behind = srcH.exists { case (sh, h) => h > tgtH.getOrElse(sh, -1L) }
-        val copied = if (!behind) 0L else {
-          checkSchemaCompatible(spark, mirrorDir, delta.drop("shard").schema)
-          val n = delta.count()
+      // one hwm per ordinal sequence (offsets are dense per shard)
+      val srcH = shardHighWaterMarks(spark, sourceDir)
+      val tgtH = shardHighWaterMarks(spark, mirrorDir)
+      tgtH.foreach { case (sq, h) =>
+        if (h > srcH.getOrElse(sq, -1L)) throw new IllegalStateException(
+          s"mirror $mirrorDir has diverged from $sourceDir on sequence $sq: mirror hwm " +
+            s"$h > source hwm ${srcH.getOrElse(sq, -1L)} — the mirror was written by " +
+            "something other than mirror()")
+      }
+      val copied = if (!srcH.exists { case (sq, h) => h > tgtH.getOrElse(sq, -1L) }) 0L else {
+        // each sequence's (mirror hwm, source hwm]: capped at the hwms this
+        // pass observed, so a publish racing the pass lands in the NEXT pass
+        // and the report describes exactly what the mirror now holds
+        val delta = src.filter(col("offset") > perSequence(src.schema, tgtH, -1L) &&
+                               col("offset") <= perSequence(src.schema, srcH, -1L))
+        checkSchemaCompatible(spark, mirrorDir, delta.drop("shard").schema)
+        // true row count, not the offset-range width: a source compacted or
+        // retained before the mirror was seeded has offset gaps. One extra
+        // pushdown-pruned pass over just the delta segments.
+        val n = delta.count()
+        // a sharded delta (shards are >= 0) keeps the shard directory layout
+        if (srcH.keysIterator.exists(_ >= 0))
           delta.repartition(col("shard")).sortWithinPartitions("shard", "offset")
             .write.mode(SaveMode.Append).partitionBy("shard").parquet(mirrorDir)
-          n
-        }
-        MirrorReport(copied, srcH.values.max, srcH.values.max)
+        else delta.write.mode(SaveMode.Append).parquet(mirrorDir)
+        n
       }
+      val hwm = srcH.values.maxOption.getOrElse(-1L)
+      MirrorReport(copied, hwm, hwm)
     }
 
   /** Replication lag in offsets (unsharded topics): how far the mirror
@@ -1103,7 +1102,7 @@ object Topic {
   def mirrorLag(spark: SparkSession, sourceDir: String, mirrorDir: String): Long =
     highWaterMark(spark, sourceDir) - highWaterMark(spark, mirrorDir)
 
-  /** fsck-grade mirror×source cross-check: how many (shard, offset) rows
+  /** fsck-grade mirror×source cross-check: how many (sequence, offset) rows
     * the mirror holds that the source no longer has — 0 for an exact
     * replica, >0 after the source compacted/retained rows the mirror had
     * already copied. One left-anti join on the ordinal key (both sides
@@ -1113,14 +1112,9 @@ object Topic {
     mergedLog(spark, mirrorDir) match {
       case None => 0L
       case Some(m) =>
-        val keyCols = if (m.columns.contains("shard")) Seq("shard", "offset") else Seq("offset")
-        mergedLog(spark, sourceDir) match {
-          case None => m.select(keyCols.map(col): _*).count()
-          case Some(s) =>
-            m.select(keyCols.map(col): _*)
-              .join(s.select(keyCols.map(col): _*), keyCols, "left_anti")
-              .count()
-        }
+        def key(log: DataFrame) = log.select(sequence(log.schema).as("_seq"), col("offset"))
+        mergedLog(spark, sourceDir).fold(m.count())(s =>
+          key(m).join(key(s), Seq("_seq", "offset"), "left_anti").count())
     }
 
   /** The deliberate operator action after a source maintenance pass
@@ -1225,17 +1219,16 @@ object Topic {
     * set (the invariant every consume path assumes: `offset ∈ [from,
     * from+count)` returning MORE than count rows means a point read
     * silently serves two different events for one ordinal). One
-    * column-pruned scan; per-shard sequences on a partitioned topic are
-    * validated independently (offsets are dense per shard) and the
-    * report aggregates across shards. Cost: O(log) once, map-side
+    * column-pruned scan; each ordinal sequence ([[sequence]]) is
+    * validated independently (offsets are dense per shard; a null
+    * shard's rows are checked as one more group) and the report
+    * aggregates across them. Cost: O(log) once, map-side
     * combined — a maintenance-window job at 100 TB, same cadence as
     * compaction.
     */
   def fsck(spark: SparkSession, topicDir: String): FsckReport = {
     val log = mergedRead(spark, topicDir)
-    val sharded = log.columns.contains("shard")
-    val keyCols = if (sharded) Seq(col("shard")) else Seq(lit(0).as("shard"))
-    val per = log.groupBy(keyCols: _*)
+    val per = log.groupBy(sequence(log.schema).as("seq"))
       .agg(count(lit(1)).as("rows"),
            count_distinct(col("offset")).as("dist"),
            min(col("offset")).as("mn"), max(col("offset")).as("mx"))

@@ -72,9 +72,12 @@ class CascadeSpec extends SparkSpec {
   test("consumer group on a sharded topic: per-shard positions and lag") {
     val root = Files.createTempDirectory("cascade-group-sh").toString
     val c    = new Cascade(spark, root)
-    Topic.publishPartitioned(Tables.events(spark, sf).limit(40), s"$root/t", shards = 2)
+    val ev   = Tables.events(spark, sf).limit(40)
+    // a null event_id hashes to a null shard, which is in no ordinal sequence
+    val nullShard = ev.limit(1).withColumn("event_id", lit(null).cast(ev.schema("event_id").dataType))
+    Topic.publishPartitioned(ev.unionByName(nullShard), s"$root/t", shards = 2)
 
-    val hwms = spark.read.parquet(s"$root/t").groupBy("shard")
+    val hwms = spark.read.parquet(s"$root/t").filter(col("shard").isNotNull).groupBy("shard")
       .agg(max(col("offset")).as("hwm")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     c.commitOffset("g", "t", 4, shard = Some(0))
@@ -87,6 +90,10 @@ class CascadeSpec extends SparkSpec {
         ((r.getAs[Long]("committed_next"), r.getAs[Long]("lag")))).toMap
     assert(lags(0) === ((4L, hwms(0) + 1L - 4L)))
     assert(lags(1) === ((7L, hwms(1) + 1L - 7L)))
+    // committing the whole log as one batch moves every shard to its head
+    // and commits nothing for the null shard
+    c.commitBatch("g2", "t", spark.read.parquet(s"$root/t"))
+    assert(c.committedOffsets("g2", "t") === hwms.map { case (sh, h) => sh -> (h + 1L) })
   }
 
   test("offsetsForTimes: the earliest offset at-or-after a probe time") {
@@ -116,9 +123,13 @@ class CascadeSpec extends SparkSpec {
       log.agg(max(col("ts"))).head().getTimestamp(0).getTime + 1000L)
     assert(c.offsetsForTimes("t", afterAll) === Map.empty)
 
-    // sharded topic: one answer per shard that has eligible events
-    Topic.publishPartitioned(ev, s"$root/ts2", shards = 2)
-    val slog = spark.read.parquet(s"$root/ts2")
+    // sharded topic: one answer per shard that has eligible events; the
+    // latest event again with a null event_id lands in a null shard, which
+    // is in no ordinal sequence and has no answer
+    val nullShard = ev.orderBy(col("ts").desc).limit(1)
+      .withColumn("event_id", lit(null).cast(ev.schema("event_id").dataType))
+    Topic.publishPartitioned(ev.unionByName(nullShard), s"$root/ts2", shards = 2)
+    val slog = spark.read.parquet(s"$root/ts2").filter(col("shard").isNotNull)
     val wantSh = slog.filter(col("ts") >= lit(probe)).groupBy("shard")
       .agg(min(col("offset"))).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap

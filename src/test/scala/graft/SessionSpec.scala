@@ -59,6 +59,21 @@ class SessionSpec extends SparkSpec {
       s"hfs.delete( outside dropTopic at lines ${deletes.map(_ + 1)}")
   }
 
+  test("src/main tests for a shard column in Topic.sequence only") {
+    val lines = Files.readAllLines(root.resolve("graft/Topic.scala")).asScala
+    val start = lines.indexWhere(_.contains("def sequence("))
+    val end = lines.indexWhere(_.trim.isEmpty, start)
+    assert(start >= 0 && end > start, "Topic.sequence not found")
+    val tests = mainSources().flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("contains(\"shard\")") => root.relativize(p).toString -> i
+      }
+    }
+    assert(tests.nonEmpty && tests.forall { case (f, i) =>
+      f == "graft/Topic.scala" && i >= start && i < end },
+      s"contains(\"shard\") outside Topic.sequence at ${tests.map { case (f, i) => s"$f:${i + 1}" }}")
+  }
+
   test("src/main builds no sibling path of a topic directory") {
     val siblings = mainSources().flatMap { p =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {

@@ -153,6 +153,14 @@ class TopicMirrorSpec extends SparkSpec {
     Topic.publish(ev, mir)
     val e = intercept[IllegalStateException](Topic.mirror(spark, src, mir))
     assert(e.getMessage.contains("diverged"))
+
+    // sharded: one mirror shard written past the source's hwm for that shard
+    val ssrc = s"$base/ssrc"; val smir = s"$base/smir"
+    Topic.publishPartitioned(ev.limit(40), ssrc, shards = 2)
+    Topic.mirror(spark, ssrc, smir)
+    Topic.publishPartitioned(ev.filter(col("event_id") % 2 === 0), smir, shards = 2)
+    val es = intercept[IllegalStateException](Topic.mirror(spark, ssrc, smir))
+    assert(es.getMessage.contains("diverged"))
   }
 
   test("mirror after source compaction/retention: loud refusal, then an ACCEPTED history-keeping replica") {
